@@ -68,7 +68,7 @@ _EXPORTS = {
     "mix_domains": "textops.sampling",
     "dedup_lines": "textops.dedup",
     "EncodedTable": "manifest", "ConcurrentCommitError": "manifest",
-    "CommitBackend": "manifest", "PosixCommitBackend": "manifest",
+    "CommitBackend": "manifest",
     "ConditionalPutCommitBackend": "manifest",
     "encode_splits": "splits", "write_encoded_splits": "splits",
     "list_splits": "splits",

@@ -12,17 +12,20 @@ Layout (no Iceberg jars in this sandbox; manifest-last commit gives the
 same atomicity):
 
     <table>/data/part-<id>.parquet     one file per logical partition
-    <table>/snapshots/snap-<n>.json    immutable snapshot manifests
-    <table>/CURRENT                    name of live snapshot (tmp+rename)
+    <table>/snapshots/snap-<n>-<tok>.json  immutable snapshot manifests
+    <table>/ptr/gen-%016d              immutable pointer generations; the
+                                       highest one names the live snapshot
 
-Data files for partitions not referenced by CURRENT are invisible —
-exactly the crash-consistency the reference gets from its tmp files.
+Data files for partitions not referenced by the live snapshot are
+invisible — exactly the crash-consistency the reference gets from its
+tmp files.
 
-Multi-writer safety: `commit` is a compare-and-swap — under a lock file
-it re-reads CURRENT and refuses (ConcurrentCommitError) when another
-writer committed since this writer read its parent snapshot, exactly
-Iceberg's optimistic-concurrency protocol.  Callers retry by re-reading
-the new CURRENT and re-planning (for write_encoded that is simply
+Multi-writer safety: `commit` is a compare-and-swap — it reads the head
+generation, refuses (ConcurrentCommitError) when it no longer names the
+parent this writer planned against, and otherwise creates generation
+head+1 put-if-absent, so of N racing writers exactly one wins (Iceberg's
+optimistic-concurrency protocol, with no lock).  Callers retry by
+re-reading the head and re-planning (for write_encoded that is simply
 calling it again: resume skips the parts the other writer landed).
 """
 
@@ -62,12 +65,10 @@ LINEAGE_DDL = ("part_id bigint, file string, n_chunks bigint, n_rows bigint, "
 FORMAT_VERSION = 2
 _SUPPORTED_VERSIONS = (1, 2)
 
-_LOCK_STALE_S = 300.0  # a crashed committer's lock is stolen after this
-
 
 class ConcurrentCommitError(RuntimeError):
-    """CURRENT moved between reading the parent snapshot and committing
-    — another writer won the race.  Re-read and retry."""
+    """The pointer head moved between reading the parent snapshot and
+    committing — another writer won the race.  Re-read and retry."""
 
 
 class CommitBackend:
@@ -85,16 +86,11 @@ class CommitBackend:
         Two racing commits with the same ``expected`` => exactly one
         wins, the other raises (optimistic concurrency, Iceberg-style).
 
-    Implementations:
-      * PosixCommitBackend (default): lock file + O_EXCL + atomic
-        rename — single node or a coherent shared filesystem.
-      * An object store (where rename is not atomic) implements
-        ``commit`` as a conditional PUT on the pointer object (S3
-        ``If-Match`` on the ETag / ``If-None-Match: *`` for the first
-        commit; GCS ``x-goog-if-generation-match``) or a catalog CAS
-        (Iceberg REST / Glue optimistic locking).  No lock object is
-        needed and there is no stolen-lock window at all: the
-        conditional PUT IS the compare-and-swap.
+    ConditionalPutCommitBackend is the default and the one on-disk
+    pointer format.  An object store implements ``commit`` as the same
+    conditional PUT (S3 ``If-None-Match: *``, GCS
+    ``x-goog-if-generation-match: 0``) or a catalog CAS (Iceberg REST /
+    Glue optimistic locking); no lock object is ever needed.
     """
 
     def current(self) -> str | None:
@@ -126,212 +122,69 @@ class CommitBackend:
             f"{type(self).__name__} does not support WAP publish")
 
 
-class PosixCommitBackend(CommitBackend):
-    """Lock-file + rename backend for POSIX filesystems.
-
-    Crash-recovery steals locks older than ``lock_stale_s`` — but
-    atomically, via ``os.rename`` to a unique name, so two waiters can
-    never both "remove" the lock and both enter the critical section
-    (the race a naive unlink-steal has: the second unlink removes the
-    FIRST stealer's freshly created lock).  Exactly one concurrent
-    stealer's rename succeeds; the loser's raises and it re-queues.
-
-    Residual hazard on POSIX only: an owner that stalls longer than the
-    stale window mid-commit can have its lock legitimately stolen.  The
-    owner therefore RE-VERIFIES ownership (uuid token in the lock file)
-    immediately before the pointer flip and aborts with
-    ConcurrentCommitError if the lock is no longer its own."""
-
-    def __init__(self, path: str, lock_stale_s: float = _LOCK_STALE_S):
-        self.path = path
-        self.snap_dir = os.path.join(path, "snapshots")
-        self._stale_s = lock_stale_s
-        self._acq_at: dict[str, float] = {}  # token -> monotonic acquire time
-
-    # -- reads
-    def current(self) -> str | None:
-        cur = os.path.join(self.path, "CURRENT")
-        if not os.path.exists(cur):
-            return None
-        with open(cur) as f:
-            return f.read().strip()
-
-    def read(self, name: str) -> str:
-        with open(os.path.join(self.snap_dir, name)) as f:
-            return f.read()
-
-    # -- lock internals
-    def _lock(self) -> str:
-        return os.path.join(self.path, "COMMIT_LOCK")
-
-    def _acquire(self) -> str:
-        """Create the lock file with O_EXCL; returns the ownership
-        token written into it."""
-        lock = self._lock()
-        token = uuid.uuid4().hex
-        deadline = time.monotonic() + 30.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, f"{token} {os.getpid()} {time.time()}".encode())
-                os.close(fd)
-                self._acq_at[token] = time.monotonic()
-                return token
-            except FileExistsError:
-                try:
-                    st = os.stat(lock)
-                except OSError:
-                    continue  # released between open and stat: retry now
-                if time.time() - st.st_mtime > self._stale_s:
-                    # presumed-crashed owner: steal ATOMICALLY by rename
-                    # to a unique name — of N racing stealers exactly one
-                    # rename succeeds, so exactly one proceeds to retry
-                    # the O_EXCL create (the old unlink-steal let a
-                    # second stealer unlink the first's fresh lock)
-                    grave = lock + f".stale-{uuid.uuid4().hex}"
-                    try:
-                        os.rename(lock, grave)
-                    except OSError:
-                        continue  # another stealer won the rename
-                    try:
-                        os.remove(grave)
-                    except OSError:
-                        pass
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock at {lock} held for >30s")
-                time.sleep(0.05)
-
-    def _owns(self, token: str) -> bool:
-        try:
-            with open(self._lock()) as f:
-                return f.read().split(" ", 1)[0] == token
-        except OSError:
-            return False
-
-    def _release(self, token: str) -> None:
-        # Never remove a lock stolen from us.  The ownership read alone
-        # is check-then-remove: an owner that reads "ours", then stalls
-        # past the stale window before the os.remove, can unlink a
-        # STEALER's freshly created lock and let a third writer in.  So
-        # remove only while the hold time is safely inside the stale
-        # window (a steal requires mtime age > _stale_s, so at < 1/2 the
-        # window the lock provably cannot have been stolen yet unless we
-        # stall another _stale_s/2 in the next few instructions).  A
-        # long-held lock is left in place for the atomic rename-steal
-        # path to reap — liveness is preserved, and we never risk
-        # unlinking another writer's live lock.
-        held = time.monotonic() - self._acq_at.pop(token, float("-inf"))
-        if held < self._stale_s * 0.5 and self._owns(token):
-            try:
-                os.remove(self._lock())
-            except OSError:
-                pass
-
-    # -- the commit point
-    def _flip_pointer(self, name: str, expected: str | None,
-                      payload: str | None) -> None:
-        """Shared CAS tail of commit (payload given: persist it first)
-        and publish (payload None: the object must already be staged):
-        verify CURRENT == expected under the lock, optionally write the
-        snapshot object, re-verify lock ownership, flip the pointer."""
-        token = self._acquire()
-        try:
-            actual = self.current()
-            if actual != expected:
-                raise ConcurrentCommitError(
-                    f"CURRENT at {self.path} is {actual!r}, expected "
-                    f"{expected!r}: another writer committed; re-read "
-                    "and retry")
-            if payload is not None:
-                tmp = os.path.join(self.snap_dir,
-                                   name + f".tmp-{uuid.uuid4().hex}")
-                with open(tmp, "w") as f:
-                    f.write(payload)
-                # Snapshot names are unique per attempt
-                # (EncodedTable.commit appends a random token), so even
-                # a stalled loser's replace below can only create an
-                # ORPHAN file — never overwrite a winner's committed
-                # snapshot.  The ownership re-verify before the pointer
-                # flip is what keeps a stolen-lock loser from flipping
-                # CURRENT itself; a stall in the microseconds between
-                # the check and the replace remains the documented
-                # POSIX residual (object-store backends have none: the
-                # conditional PUT is the whole CAS).
-                os.replace(tmp, os.path.join(self.snap_dir, name))
-            cur_tmp = os.path.join(self.path,
-                                   f"CURRENT.tmp-{uuid.uuid4().hex}")
-            with open(cur_tmp, "w") as f:
-                f.write(name)
-            if not self._owns(token):
-                try:
-                    os.remove(cur_tmp)
-                except OSError:
-                    pass
-                raise ConcurrentCommitError(
-                    f"commit lock at {self.path} was stolen (writer "
-                    "stalled past the stale window); re-read and retry")
-            os.replace(cur_tmp, os.path.join(self.path, "CURRENT"))
-        finally:
-            self._release(token)
-
-    def commit(self, name: str, payload: str,
-               expected: str | None) -> None:
-        os.makedirs(self.snap_dir, exist_ok=True)
-        self._flip_pointer(name, expected, payload)
-
-    def stage(self, name: str, payload: str) -> None:
-        # unique-per-attempt names need no lock: a stage can only
-        # create a new object, never clobber a committed one
-        os.makedirs(self.snap_dir, exist_ok=True)
-        tmp = os.path.join(self.snap_dir, name + f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(payload)
-        os.replace(tmp, os.path.join(self.snap_dir, name))
-
-    def publish(self, name: str, expected: str | None) -> None:
-        # the staged object must exist before the pointer can name it
-        if not os.path.exists(os.path.join(self.snap_dir, name)):
-            raise ValueError(f"cannot publish {name!r}: not staged")
-        self._flip_pointer(name, expected, None)
-
-
 class ConditionalPutCommitBackend(CommitBackend):
-    """The documented object-store contract, exercised locally: every
-    write is a PUT-IF-ABSENT of an immutable object, emulated with
-    os.link of a fully-written unique temp onto the target name — the
-    POSIX rendering of S3 ``If-None-Match: *`` / GCS
-    ``x-goog-if-generation-match: 0``.
+    """The table pointer as a chain of immutable objects.  Every write
+    is a PUT-IF-ABSENT, emulated with os.link of a fully-written unique
+    temp onto the target name — the POSIX rendering of S3
+    ``If-None-Match: *`` / GCS ``x-goog-if-generation-match: 0``.
 
-    The pointer is not a mutated file but a chain of immutable
-    GENERATION objects ``ptr/gen-%016d`` whose content is the snapshot
-    name; ``current()`` reads the highest generation.  ``commit``
-    verifies the head value equals ``expected`` and then attempts to
-    create generation ``head+1`` — of N racing writers with the same
-    expected head exactly one link() succeeds, the rest get
-    FileExistsError => ConcurrentCommitError.  There is NO lock object,
-    hence no stale-lock state and no steal window: a writer killed at
+    The pointer is not a mutated file but GENERATION objects
+    ``ptr/gen-%016d`` whose content is a snapshot name; the highest
+    generation is the live snapshot.  ``commit`` verifies the head value
+    equals ``expected`` and then attempts to create generation
+    ``head+1`` — of N racing writers with the same expected head exactly
+    one link() succeeds, the rest get FileExistsError =>
+    ConcurrentCommitError.  There is NO lock object: a writer killed at
     ANY instruction leaves at most an orphan temp/payload, never a
     half-flipped pointer, and blocks nobody (kill-schedule
-    stress-tested).  This is the semantics an S3/GCS/catalog backend
-    inherits by swapping the link() for the real conditional PUT."""
+    stress-tested).  An S3/GCS/catalog backend inherits these semantics
+    by swapping the link() for the real conditional PUT.
+
+    Generations are dense from 1 and never deleted (only ``head+1`` is
+    ever created), which is what lets ``_head`` binary-search instead
+    of listing the directory."""
 
     def __init__(self, path: str):
         self.path = path
         self.snap_dir = os.path.join(path, "snapshots")
         self.ptr_dir = os.path.join(path, "ptr")
+        self._seen = 0  # highest generation this handle saw exist
+
+    def _gen(self, gen: int) -> str:
+        return os.path.join(self.ptr_dir, f"gen-{gen:016d}")
 
     def _head(self) -> tuple[int, str | None]:
+        """(generation, snapshot name) of the live pointer.  Density
+        makes "gen-g exists" monotone in g, so gallop from the highest
+        generation already seen (steps 1, 2, 4, ...) to bracket the
+        head, then bisect: O(log N) stats for N generations on a fresh
+        handle, one stat when nothing was committed since this handle
+        last looked.  The answer was the head at some instant during
+        the call (generations only grow, one at a time).
+
+        No gen-1 means an empty table, or one written before the
+        generation chain, whose legacy ``CURRENT`` file is then the
+        head at generation 0 — the next commit links gen-1 and so
+        migrates the table in place."""
+        lo, step = self._seen, 1  # gen-lo exists (or lo == 0)
+        while os.path.exists(self._gen(lo + step)):
+            lo, step = lo + step, step * 2
+        hi = lo + step  # gen-hi does not exist
+        while hi - lo > 1:
+            mid = (lo + hi) // 2
+            if os.path.exists(self._gen(mid)):
+                lo = mid
+            else:
+                hi = mid
+        self._seen = lo
         try:
-            gens = [n for n in os.listdir(self.ptr_dir)
-                    if n.startswith("gen-")]
+            with open(self._gen(lo) if lo else
+                      os.path.join(self.path, "CURRENT")) as f:
+                return lo, f.read().strip()
         except FileNotFoundError:
+            if lo:
+                raise
             return 0, None
-        if not gens:
-            return 0, None
-        top = max(gens)
-        with open(os.path.join(self.ptr_dir, top)) as f:
-            return int(top[4:]), f.read().strip()
 
     def current(self) -> str | None:
         return self._head()[1]
@@ -359,24 +212,35 @@ class ConditionalPutCommitBackend(CommitBackend):
             except OSError:
                 pass
 
-    def commit(self, name: str, payload: str,
-               expected: str | None) -> None:
+    def _head_is(self, expected: str | None) -> int:
         gen, actual = self._head()
         if actual != expected:
             raise ConcurrentCommitError(
                 f"pointer head at {self.path} is {actual!r}, expected "
                 f"{expected!r}: another writer committed; re-read and "
                 "retry")
-        # snapshot names are unique per attempt, so a collision here
-        # means a duplicated name, not a race — surface it
-        if not self._put_if_absent(self.snap_dir, name, payload):
-            raise ConcurrentCommitError(
-                f"snapshot object {name!r} already exists")
+        return gen
+
+    def _link_next(self, gen: int, name: str) -> None:
         if not self._put_if_absent(self.ptr_dir, f"gen-{gen + 1:016d}",
                                    name):
             raise ConcurrentCommitError(
                 f"generation {gen + 1} at {self.path} was taken by a "
                 "concurrent writer; re-read and retry")
+
+    def commit(self, name: str, payload: str,
+               expected: str | None) -> None:
+        gen = self._head_is(expected)
+        # snapshot names are unique per attempt, so a collision here
+        # means a duplicated name, not a race — surface it
+        self.stage(name, payload)
+        try:
+            self._link_next(gen, name)
+        except ConcurrentCommitError:
+            # no generation names the object: reclaim it (a writer
+            # killed right here leaves an orphan for expire_snapshots)
+            os.remove(os.path.join(self.snap_dir, name))
+            raise
 
     def stage(self, name: str, payload: str) -> None:
         # the object-store rendering is literally a conditional PUT of
@@ -388,17 +252,7 @@ class ConditionalPutCommitBackend(CommitBackend):
     def publish(self, name: str, expected: str | None) -> None:
         if not os.path.exists(os.path.join(self.snap_dir, name)):
             raise ValueError(f"cannot publish {name!r}: not staged")
-        gen, actual = self._head()
-        if actual != expected:
-            raise ConcurrentCommitError(
-                f"pointer head at {self.path} is {actual!r}, expected "
-                f"{expected!r}: another writer committed; re-read and "
-                "retry")
-        if not self._put_if_absent(self.ptr_dir, f"gen-{gen + 1:016d}",
-                                   name):
-            raise ConcurrentCommitError(
-                f"generation {gen + 1} at {self.path} was taken by a "
-                "concurrent writer; re-read and retry")
+        self._link_next(self._head_is(expected), name)
 
 
 class EncodedTable:
@@ -408,7 +262,7 @@ class EncodedTable:
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.snap_dir = os.path.join(path, "snapshots")
-        self.backend = backend or PosixCommitBackend(path)
+        self.backend = backend or ConditionalPutCommitBackend(path)
 
     def _load_snapshot(self, name: str) -> dict:
         snap = json.loads(self.backend.read(name))
@@ -550,8 +404,8 @@ class EncodedTable:
 
     def commit(self, parts: dict[str, dict], schema_ipc: bytes | None,
                parent: dict | None, meta: dict | None = None) -> dict:
-        """Write snapshot json, then flip CURRENT atomically (commit
-        point).  Compare-and-swap through the pluggable CommitBackend:
+        """Write snapshot json, then advance the pointer atomically
+        (commit point).  Compare-and-swap through the CommitBackend:
         refuses with ConcurrentCommitError when CURRENT no longer names
         `parent` (another writer committed since this writer planned
         against it).
@@ -2101,11 +1955,9 @@ def export_parquet(spark: SparkSession, table_path: str, dst_path: str,
     snap = _resolve_snap(table, snapshot_id, ref)
     if snap is None:
         raise ValueError(f"no committed snapshot at {table_path}")
-    dec = read_decoded(spark, table_path, columns=columns,
-                       backend=backend,
-                       snapshot_id=snap["snapshot_id"]
-                       if ref is None else None,
-                       ref=ref)
+    # decode THIS snapshot: re-resolving `ref` could land on a newer
+    # branch head than the snapshot_id returned below
+    dec = _decode_snapshot(spark, table, snap, columns)
     w = dec.write.mode("error")
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", int(max_records_per_file))
@@ -2482,9 +2334,10 @@ def expire_snapshots(table_path: str, keep_last: int = 1,
     expired snapshot id raises (it is no longer an ancestor), exactly
     like Iceberg.
 
-    Snapshot objects are files under snapshots/ for both shipped
-    backends; an object-store backend maps the removals to DELETE
-    calls.  Returns {"expired": [...], "orphans_removed": [...],
+    Snapshot objects are files under snapshots/; an object-store
+    backend maps the removals to DELETE calls.  Pointer generations
+    (ptr/) are never removed — the head search relies on them staying
+    dense.  Returns {"expired": [...], "orphans_removed": [...],
     "tombstone": name | None}."""
     table = EncodedTable(table_path, backend=backend)
     cutoff = time.time() - older_than_s
@@ -2819,10 +2672,19 @@ def read_decoded(spark: SparkSession, table_path: str,
     no shuffle).  `ref="name"` reads the snapshot a named tag/branch
     pins (create_ref) — the reproducible-training-dataset handle."""
     table = EncodedTable(table_path, backend=backend)
-    snap = _resolve_snap(table, snapshot_id, ref)
+    return _decode_snapshot(spark, table,
+                            _resolve_snap(table, snapshot_id, ref), columns)
+
+
+def _decode_snapshot(spark: SparkSession, table: "EncodedTable",
+                     snap: dict | None,
+                     columns: list[str] | None) -> DataFrame:
+    """Decoded rows of one already-resolved snapshot (read_decoded's
+    body; export_parquet reuses it so the rows match the id it
+    reports)."""
     files = table.data_files(snap)
     if not files:
-        raise ValueError(f"no committed snapshot at {table_path}")
+        raise ValueError(f"no committed snapshot at {table.path}")
     enc = spark.read.schema(ENCODED_DDL).parquet(*files)
     meta = table.meta(snap)
     # pending deletes anti-join on the layout key: decode those columns

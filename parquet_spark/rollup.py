@@ -35,32 +35,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .manifest import (ConditionalPutCommitBackend, EncodedTable,
-                       PosixCommitBackend, read_decoded, read_increment,
+from .manifest import (EncodedTable, read_decoded, read_increment,
                        write_encoded)
 
 _MERGEABLE = ("count", "sum", "min", "max")
 
 
-def _backend_kind(b) -> str:
-    """Serializable name of a backend so the rollup SPEC can record how
-    to reach its source table across refreshes (src and dst can live on
-    different stores — a posix rollup over an object-store source)."""
-    if b is None or isinstance(b, PosixCommitBackend):
-        return "posix"
-    if isinstance(b, ConditionalPutCommitBackend):
-        return "condput"
-    return "custom"
-
-
-def _make_backend(path: str, kind: str):
-    if kind == "posix":
-        return None
-    if kind == "condput":
-        return ConditionalPutCommitBackend(path)
-    raise ValueError(
-        "the rollup source used a custom CommitBackend; pass it to "
-        "refresh_rollup(src_backend=...) explicitly")
+def _no_source(src_path: str, src_backend) -> str:
+    return (f"no committed snapshot at {src_path}"
+            + ("" if src_backend is not None else
+               " (if the source uses a custom CommitBackend, pass "
+               "src_backend=...; `backend` commits only the rollup "
+               "table)"))
 
 
 def _derive(df: DataFrame, derived: dict[str, str] | None) -> DataFrame:
@@ -139,24 +125,18 @@ def create_rollup(spark: SparkSession, src_path: str, dst_path: str,
     in {count, sum, min, max} (count accepts "*"); `derived` adds
     pre-group SQL expressions (e.g. {"day": "date_trunc('DAY', ts)"})
     usable in group_cols.  `backend` commits the ROLLUP table;
-    `src_backend` reads the source (they can differ — the spec records
-    the source backend kind so refreshes reconnect unaided).  Returns
-    the stamped snapshot."""
+    `src_backend` reads the source (they can differ; a source on a
+    custom backend must be passed again to every `refresh_rollup`).
+    Returns the stamped snapshot."""
     spec = {"src": src_path, "group_cols": list(group_cols),
             "aggs": {k: list(v) for k, v in aggs.items()},
             "derived": dict(derived or {}),
             "key": list(key or group_cols[:1]), "n_parts": n_parts,
-            "rows_per_chunk": rows_per_chunk,
-            "src_backend": _backend_kind(src_backend)}
+            "rows_per_chunk": rows_per_chunk}
     src = EncodedTable(src_path, backend=src_backend)
     cur = src.current_snapshot()
     if cur is None:
-        raise ValueError(
-            f"no committed snapshot at {src_path}"
-            + ("" if src_backend is not None else
-               " (if the source uses a non-posix CommitBackend, pass "
-               "src_backend=...; `backend` commits only the rollup "
-               "table)"))
+        raise ValueError(_no_source(src_path, src_backend))
     spec["src_snapshot"] = cur["snapshot_id"]
     out = _aggregate(
         read_decoded(spark, src_path, snapshot_id=cur["snapshot_id"],
@@ -183,13 +163,10 @@ def refresh_rollup(spark: SparkSession, dst_path: str,
     t = EncodedTable(dst_path, backend=backend)
     base = _stamped_base(t)
     spec = dict(base["meta"]["rollup"])
-    if src_backend is None:
-        src_backend = _make_backend(spec["src"],
-                                    spec.get("src_backend", "posix"))
     src = EncodedTable(spec["src"], backend=src_backend)
     now = src.current_snapshot()
     if now is None:
-        raise ValueError(f"no committed snapshot at {spec['src']}")
+        raise ValueError(_no_source(spec["src"], src_backend))
     frm, to = spec["src_snapshot"], now["snapshot_id"]
     if to == frm:
         return {"refreshed": False, "mode": "noop", "from": frm,

@@ -183,8 +183,10 @@ def top_vocabulary(df: DataFrame, text_col: str = "text",
     staple).  explode -> hash-groupBy count (map-side partial combine,
     one shuffle of (word, count) pairs) -> rank with a deterministic
     (count desc, word asc) tie-break so the cut is reproducible.  The
-    final top-k is a WindowGroupLimit over a single ordering — at any
-    corpus size only distinct-word rows shuffle, never documents."""
+    final cut is a top-k (Catalyst rewrites the unpartitioned
+    ``row_number() <= k`` into TakeOrderedAndProject below the Window)
+    — at any corpus size only distinct-word rows shuffle, never
+    documents."""
     from pyspark.sql import Window
     t = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     words = (df.select(F.explode(F.split(t, " ")).alias("word"))

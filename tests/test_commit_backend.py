@@ -1,14 +1,12 @@
 """CommitBackend: the pluggable atomic-commit primitive.
 
 The snapshot chain's only storage-specific piece is the compare-and-swap
-on CURRENT.  These tests drive it through the interface (so an
-object-store backend is a drop-in), and pin the two lock hazards the
-posix implementation must not have:
-
-  * the unlink-steal race (two waiters both decide a lock is stale,
-    both remove it, both enter the critical section — the second
-    remove deletes the FIRST stealer's fresh lock);
-  * a stalled owner committing after its lock was legitimately stolen.
+on the table pointer.  These tests drive it through the interface (so an
+object-store backend is a drop-in) and pin the generation-chain
+protocol every table uses: exactly one winner per parent, a head search
+that stays correct across power-of-two generation counts, liveness
+after writers are killed mid-commit, and the read shim for tables whose
+pointer is a legacy CURRENT file.
 
 No Spark needed — commit() is pure driver-side code.
 """
@@ -22,7 +20,8 @@ import time
 import pytest
 
 from parquet_spark.manifest import (CommitBackend, ConcurrentCommitError,
-                                    EncodedTable, PosixCommitBackend)
+                                    ConditionalPutCommitBackend,
+                                    EncodedTable)
 
 
 def _mk_table():
@@ -42,18 +41,12 @@ def test_commit_and_read_through_backend():
     assert "_snap_name" not in got  # never serialized
 
 
-def test_stale_lock_steal_is_atomic_under_contention():
-    """N threads race a commit with the same parent while a STALE lock
-    blocks the path: exactly one commit wins, the rest raise
-    ConcurrentCommitError, and CURRENT names a snapshot whose file
+def test_same_parent_race_has_exactly_one_winner():
+    """N threads race a commit with the same parent on the default
+    backend: exactly one commit wins, the rest raise
+    ConcurrentCommitError, and the head names a snapshot whose file
     content matches (no half-commit, no clobber)."""
     path = _mk_table()
-    os.makedirs(path, exist_ok=True)
-    lock = os.path.join(path, "COMMIT_LOCK")
-    with open(lock, "w") as f:
-        f.write("deadbeef 0 0")
-    os.utime(lock, (time.time() - 10_000, time.time() - 10_000))
-
     results, errors = [], []
     barrier = threading.Barrier(8)
 
@@ -73,15 +66,14 @@ def test_stale_lock_steal_is_atomic_under_contention():
         th.start()
     for th in threads:
         th.join(60)
+    assert not any(th.is_alive() for th in threads)
     assert not errors, errors
     assert len(results) == 1, results  # exactly one winner
     t = EncodedTable(path)
     snap = t.current_snapshot()
     assert snap["snapshot_id"] == 0
     assert snap["parts"]["0"]["writer"] == results[0]
-    assert not os.path.exists(lock)  # released
-    # no stale-steal debris left behind
-    assert not [n for n in os.listdir(path) if n.startswith("COMMIT_LOCK.")]
+    assert os.listdir(os.path.join(path, "ptr")) == ["gen-" + "1".zfill(16)]
 
 
 def test_concurrent_chained_commits_never_lose_an_update():
@@ -119,25 +111,6 @@ def test_concurrent_chained_commits_never_lose_an_update():
     # chain integrity: every snapshot's parent exists and precedes it
     snaps = sorted(os.listdir(os.path.join(path, "snapshots")))
     assert len(snaps) == 21
-
-
-def test_stalled_owner_aborts_after_lock_stolen():
-    """An owner whose lock was stolen (stale window elapsed mid-commit)
-    must abort at the pre-flip ownership check, not clobber."""
-    path = _mk_table()
-    os.makedirs(path, exist_ok=True)
-    b1 = PosixCommitBackend(path, lock_stale_s=0.1)
-    token1 = b1._acquire()
-    assert b1._owns(token1)
-    time.sleep(0.15)  # b1 "stalls" past the stale window
-    b2 = PosixCommitBackend(path, lock_stale_s=0.1)
-    token2 = b2._acquire()  # legitimately steals
-    assert b2._owns(token2)
-    assert not b1._owns(token1)
-    b1._release(token1)  # must NOT remove b2's lock
-    assert b2._owns(token2)
-    b2._release(token2)
-    assert not os.path.exists(os.path.join(path, "COMMIT_LOCK"))
 
 
 class _MemBackend(CommitBackend):
@@ -223,8 +196,7 @@ def test_float_zone_bound_classification():
 def test_conditional_put_backend_contract():
     """The object-store contract exercised locally: put-if-absent
     generation objects, no lock state, exactly-one-winner CAS, and the
-    loser leaves only an orphan payload (never a pointer change)."""
-    from parquet_spark.manifest import ConditionalPutCommitBackend
+    loser leaves nothing behind (never a pointer change)."""
     path = _mk_table()
     t = EncodedTable(path, backend=ConditionalPutCommitBackend(path))
     s0 = t.commit({"0": {"n_rows": 1}}, None, None)
@@ -242,17 +214,53 @@ def test_conditional_put_backend_contract():
     assert json.loads(t.backend.read(s1["_snap_name"]))["parts"] == {"1": {}}
 
 
+def test_head_search_across_power_of_two_generation_counts():
+    """The head is found by galloping and bisecting over the dense
+    generations, so an off-by-one would show at the power-of-two
+    boundaries.  After every commit up to 1025 generations, current()
+    must name the newest snapshot from the committing handle (search
+    resumes at the generation it last saw), from a fresh handle (full
+    search from gen-1), and from an observer that only looks at
+    1, 2, 3, 4, 5, 1023, 1024 and 1025 (search jumps over a gap)."""
+    path = _mk_table()
+    be = ConditionalPutCommitBackend(path)
+    observer = ConditionalPutCommitBackend(path)
+    prev = None
+    for gen in range(1, 1026):
+        name = f"snap-{gen:06d}.json"
+        be.commit(name, "{}", prev)
+        prev = name
+        assert be.current() == name
+        assert ConditionalPutCommitBackend(path)._head() == (gen, name)
+        if gen in (1, 2, 3, 4, 5, 1023, 1024, 1025):
+            assert observer.current() == name
+
+
+def test_legacy_current_file_is_the_head_until_gen_1_exists():
+    """A table written before the generation chain keeps its pointer
+    in a CURRENT file.  With no gen-1, that file is the head at
+    generation 0; the next commit CASes against it, links gen-1, and
+    from then on the chain alone is the pointer."""
+    path = _mk_table()
+    be = ConditionalPutCommitBackend(path)
+    assert be._head() == (0, None)
+    with open(os.path.join(path, "CURRENT"), "w") as f:
+        f.write("snap-000000-legacy.json\n")
+    assert be._head() == (0, "snap-000000-legacy.json")
+    with pytest.raises(ConcurrentCommitError):
+        be.commit("snap-000001-a.json", "{}", None)
+    be.commit("snap-000001-b.json", "{}", "snap-000000-legacy.json")
+    assert be._head() == (1, "snap-000001-b.json")
+    assert ConditionalPutCommitBackend(path).current() == \
+        "snap-000001-b.json"
+
+
 _WRITER_SRC = '''
 import os, random, sys, time
 sys.path.insert(0, {repo!r})
-from parquet_spark.manifest import (ConcurrentCommitError,
-                                    ConditionalPutCommitBackend,
-                                    EncodedTable, PosixCommitBackend)
-path, kind, n, wid, log = (sys.argv[1], sys.argv[2], int(sys.argv[3]),
-                           sys.argv[4], sys.argv[5])
-be = (PosixCommitBackend(path, lock_stale_s=0.5) if kind == "posix"
-      else ConditionalPutCommitBackend(path))
-t = EncodedTable(path, backend=be)
+from parquet_spark.manifest import ConcurrentCommitError, EncodedTable
+path, n, wid, log = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
+t = EncodedTable(path)
 done = 0
 while done < n:
     parent = t.current_snapshot()
@@ -273,15 +281,13 @@ while done < n:
 '''
 
 
-@pytest.mark.parametrize("kind", ["posix", "condput"])
-def test_multi_writer_kill_schedule_stress(kind, tmp_path):
+def test_multi_writer_kill_schedule_stress(tmp_path):
     """N writer PROCESSES CAS-retry against one table while two of
     them are SIGKILLed mid-flight; replacements then join.  Invariants
     under every kill schedule: no logged (=acknowledged) commit is
     ever lost, the chain stays linear (snapshot_id == part count, one
-    part per commit), and the table stays LIVE — for the posix backend
-    that means a killed lock holder is stolen from, for the
-    conditional-PUT backend there is no lock to leak at all."""
+    part per commit), and the table stays LIVE — there is no lock for
+    a killed writer to leak."""
     import signal
     import subprocess
     import sys as _sys
@@ -293,8 +299,8 @@ def test_multi_writer_kill_schedule_stress(kind, tmp_path):
 
     def spawn(wid, n):
         log = str(tmp_path / f"log-{wid}")
-        p = subprocess.Popen([_sys.executable, script, path, kind,
-                              str(n), wid, log])
+        p = subprocess.Popen([_sys.executable, script, path, str(n),
+                              wid, log])
         return p, log
 
     procs = [spawn(f"a{i}", 6) for i in range(5)]
@@ -305,17 +311,12 @@ def test_multi_writer_kill_schedule_stress(kind, tmp_path):
         assert p.wait(120) == 0
     for p, _ in procs[:2]:
         p.wait(10)
-    # liveness after the kills: fresh writers must still commit (for
-    # posix this crosses the stale-lock steal if a victim died holding
-    # the lock)
+    # liveness after the kills: fresh writers must still commit
     procs2 = [spawn(f"b{i}", 3) for i in range(2)]
     for p, _ in procs2:
         assert p.wait(120) == 0
 
-    from parquet_spark.manifest import ConditionalPutCommitBackend
-    be = (PosixCommitBackend(path) if kind == "posix"
-          else ConditionalPutCommitBackend(path))
-    final = EncodedTable(path, backend=be).current_snapshot()
+    final = EncodedTable(path).current_snapshot()
     parts = final["parts"]
     logged = []
     for _, log in procs + procs2:
@@ -341,8 +342,8 @@ def test_write_resume_read_through_conditional_put_backend(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from parquet_spark.corpus import gen_corpus
-    from parquet_spark.manifest import (ConditionalPutCommitBackend,
-                                        read_decoded, write_encoded)
+    from parquet_spark.datasource import register
+    from parquet_spark.manifest import read_decoded, write_encoded
     df = gen_corpus(spark, 300, seed=31, parts=3).select(
         "url", "warc_ts", "lang", "text")
     path = str(tmp_path / "tbl")
@@ -357,6 +358,12 @@ def test_write_resume_read_through_conditional_put_backend(spark, tmp_path):
     dec = read_decoded(spark, path, backend=be)
     assert dec.count() == 300
     assert dec.select(*df.columns).exceptAll(df).count() == 0
+    # the DataSource opens tables with the default backend and must see
+    # the same pointer
+    register(spark)
+    ds = spark.read.format("parquet_spark").load(path)
+    assert ds.select(*df.columns).exceptAll(df).count() == 0
+    assert ds.count() == 300
 
 
 def test_lifecycle_verbs_through_conditional_put_backend(spark, tmp_path):
@@ -415,9 +422,67 @@ def test_lifecycle_verbs_through_conditional_put_backend(spark, tmp_path):
             read_decoded(spark, path, backend=be).groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n")).collect()}
     assert got == want
-    # the spec recorded the source backend kind: refresh reconnects
-    # to the condput source with no src_backend argument
+    # the default backend reads the same generation chain, so refresh
+    # reaches the source with no src_backend argument
     assert refresh_rollup(spark, roll, backend=rbe)["refreshed"] is False
     # pointer state stayed pure generation-chain throughout
     assert not os.path.exists(os.path.join(path, "CURRENT"))
     assert not os.path.exists(os.path.join(path, "COMMIT_LOCK"))
+
+
+@pytest.mark.spark
+def test_legacy_current_table_reads_and_continues_its_chain(spark,
+                                                            tmp_path):
+    """A table laid out the pre-generation-chain way (snapshot JSON +
+    CURRENT file, no ptr/) reads through the library and through the
+    DataSource, and one append continues its chain: the new snapshot's
+    parent is the legacy one and gen-1 now holds the pointer."""
+    import shutil
+
+    from parquet_spark.corpus import gen_corpus
+    from parquet_spark.datasource import register
+    from parquet_spark.manifest import read_decoded, write_encoded
+    cols = ["url", "warc_ts", "lang", "text"]
+    df = gen_corpus(spark, 200, seed=41, parts=2).select(*cols)
+    path = str(tmp_path / "tbl")
+    write_encoded(df, path, key=["url"], n_parts=2)
+    legacy = EncodedTable(path).backend.current()
+    shutil.rmtree(os.path.join(path, "ptr"))
+    with open(os.path.join(path, "CURRENT"), "w") as f:
+        f.write(legacy)
+    assert sorted(os.listdir(os.path.join(path, "snapshots"))) == [legacy]
+
+    assert read_decoded(spark, path).count() == 200
+    register(spark)
+    ds = spark.read.format("parquet_spark").load(path)
+    assert ds.select(*cols).exceptAll(df).count() == 0
+
+    extra = gen_corpus(spark, 50, seed=43, parts=1).select(*cols)
+    snap = write_encoded(extra, path, key=["url"], n_parts=2,
+                         part_offset=2)
+    assert snap["snapshot_id"] == 1
+    assert snap["parent_name"] == legacy
+    assert os.listdir(os.path.join(path, "ptr")) == ["gen-" + "1".zfill(16)]
+    assert read_decoded(spark, path).count() == 250
+    assert [s["_snap_name"] for s in EncodedTable(path).history()] == \
+        [legacy, snap["_snap_name"]]
+
+
+@pytest.mark.spark
+def test_rollup_over_custom_backend_source_needs_src_backend(spark,
+                                                             tmp_path):
+    """Nothing on disk says how to reach a source committed through a
+    custom backend, so a refresh without `src_backend=` fails loudly
+    instead of reading an empty table."""
+    from parquet_spark.corpus import gen_corpus
+    from parquet_spark.manifest import write_encoded
+    from parquet_spark.rollup import create_rollup, refresh_rollup
+    src, roll = str(tmp_path / "src"), str(tmp_path / "roll")
+    mem = _MemBackend()
+    write_encoded(gen_corpus(spark, 100, seed=47, parts=1), src,
+                  key=["lang"], n_parts=2, backend=mem)
+    create_rollup(spark, src, roll, group_cols=["lang"],
+                  aggs={"n": ("count", "*")}, src_backend=mem)
+    with pytest.raises(ValueError, match="src_backend"):
+        refresh_rollup(spark, roll)
+    assert refresh_rollup(spark, roll, src_backend=mem)["mode"] == "noop"

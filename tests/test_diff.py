@@ -111,3 +111,34 @@ def test_export_parquet_faithful_and_partitioned(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not empty"):
         export_parquet(spark, path, dst)
+
+
+def test_export_parquet_decodes_the_snapshot_it_resolved(spark, tmp_path,
+                                                         monkeypatch):
+    """`ref=` is resolved once: a branch moved between that resolve and
+    the read must not change the exported rows, which always match the
+    reported snapshot_id."""
+    import parquet_spark.manifest as m
+
+    path = str(tmp_path / "t")
+    write_encoded(_docs(spark, 0, 100), path, key=["doc_id"],
+                  n_parts=2)                                  # snap 0
+    m.create_ref(path, "b", kind="branch")                    # b -> 0
+    write_encoded(_docs(spark, 100, 150), path, key=["doc_id"],
+                  n_parts=2, part_offset=2)                   # snap 1
+    resolve = m._resolve_snap
+
+    def resolve_then_move_branch(table, snapshot_id, ref=None):
+        snap = resolve(table, snapshot_id, ref)
+        m.create_ref(path, "b", kind="branch")                # b -> 1
+        return snap
+
+    monkeypatch.setattr(m, "_resolve_snap", resolve_then_move_branch)
+    dst = str(tmp_path / "exp")
+    rep = m.export_parquet(spark, path, dst, ref="b")
+    monkeypatch.undo()
+    assert rep["snapshot_id"] == 0
+    back = spark.read.parquet(dst)
+    assert back.count() == 100
+    lib = read_decoded(spark, path, snapshot_id=0)
+    assert back.select(*lib.columns).exceptAll(lib).count() == 0

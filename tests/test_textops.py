@@ -474,11 +474,15 @@ def test_top_vocabulary_deterministic_ranking(spark):
     from parquet_spark.textops.textstats import top_vocabulary
     df = spark.createDataFrame(
         [(0, "b a a c b a"), (1, "c b  d")], "doc_id int, text string")
-    out = [(r.rank, r.word, r.n) for r in
-           top_vocabulary(df, k=10).orderBy("rank").collect()]
+    top = top_vocabulary(df, k=10)
+    out = [(r.rank, r.word, r.n) for r in top.orderBy("rank").collect()]
     # a:3 b:3 c:2 d:1 — ties broken word-asc; empty token (double
     # space) excluded
     assert out == [(1, "a", 3), (2, "b", 3), (3, "c", 2), (4, "d", 1)]
+    # Catalyst rewrites the unpartitioned `row_number() <= k` into a
+    # top-k below the Window, so only k rows are ever ranked
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject(limit=10," in plan, plan[:2000]
 
 
 @pytest.mark.spark
@@ -760,15 +764,26 @@ def test_token_index_prefix_search(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_bigram_lm_train_counts_and_caps(spark):
+def test_bigram_lm_train_counts_and_caps(spark, monkeypatch):
     """train_bigram_lm on a hand-countable corpus: exact unigram/bigram
     counts, deterministic (count desc, word asc) vocab cut, and the
     invariant that no bigram key escapes the vocabulary (OOV tokens are
-    semi-joined away BEFORE the pair-count shuffle)."""
+    semi-joined away BEFORE the pair-count shuffle).  Both caps run as
+    a top-k below the Window, never a full ranking."""
     from parquet_spark.textops.textstats import train_bigram_lm
     rows = [(1, "a b a b c"), (2, "a b z"), (3, "c a")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    plans, collect = [], type(df).collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", recording_collect)
     lm = train_bigram_lm(df, vocab_size=3, bigram_cap=16)
+    monkeypatch.undo()
+    assert "TakeOrderedAndProject(limit=3," in plans[0], plans[0][:2000]
+    assert "TakeOrderedAndProject(limit=16," in plans[-1], plans[-1][:2000]
     # counts: a=4 b=3 c=2 z=1 -> vocab cap 3 drops z
     assert lm["vocab"] == {"a": 4, "b": 3, "c": 2}
     assert lm["n_tokens"] == 10
