@@ -35,7 +35,8 @@ Execution shape (scale notes):
   top-level columns of the chunk container (names/payloads/n_rows +
   zone arrays when filters were pushed), each chunk row is zone-tested
   in pure python (the per-part summary test _part_keep_term applied at
-  chunk granularity; Bloom filters are skipped — conservative), and
+  chunk granularity, plus the chunk's Bloom filter for string =/IN
+  terms, tested with the engine's own bit positions), and
   surviving chunks decode straight to Arrow RecordBatches via
   ``decode_column`` — the identical kernels decode_table uses, so the
   two read paths cannot diverge.  Column projection prunes DECODE and
@@ -239,7 +240,14 @@ def _read_part_file(file: str, state: dict, zpred):
         need += ["zone_cols", "zone_min_str", "zone_max_str",
                  "zone_min_num", "zone_max_num", "zone_min_dbl",
                  "zone_max_dbl", "zone_nulls"]
+        terms = (zpred if isinstance(zpred, list)
+                 else [t for ts in zpred["any"] for t in ts])
+        if any(_bloom_term(t) for t in terms):
+            need += ["bloom_cols", "blooms"]
     tbl = pq.read_table(file, columns=need)
+
+    def term_keep(zones, row, n_rows, t):
+        return _part_keep_term(zones, n_rows, t) and _bloom_keep(row, t)
 
     def chunk_keep(row, n_rows):
         zones = {}
@@ -254,9 +262,9 @@ def _read_part_file(file: str, state: dict, zpred):
                             row["zone_max_dbl"][j],
                             row["zone_nulls"][j], n_rows)
         if isinstance(zpred, dict):
-            return any(all(_part_keep_term(zones, n_rows, t)
-                           for t in ts) for ts in zpred["any"])
-        return all(_part_keep_term(zones, n_rows, t) for t in zpred)
+            return any(all(term_keep(zones, row, n_rows, t) for t in ts)
+                       for ts in zpred["any"])
+        return all(term_keep(zones, row, n_rows, t) for t in zpred)
 
     for batch in tbl.to_batches():
         names_col = batch.column(batch.schema.get_field_index("names"))
@@ -269,7 +277,7 @@ def _read_part_file(file: str, state: dict, zpred):
             if zpred is not None:
                 row = {c: batch.column(
                     batch.schema.get_field_index(c))[i].as_py()
-                    for c in need if c.startswith("zone")}
+                    for c in need if c.startswith(("zone", "bloom"))}
                 if not chunk_keep(row, n_rows):
                     continue
             names = names_col[i].as_py()
@@ -306,82 +314,83 @@ def _read_part_file(file: str, state: dict, zpred):
             yield out if out.schema.equals(expect) else out.cast(expect)
 
 
+def _bloom_term(term: tuple):
+    """The normalized term when it is a string =/IN (the only shape a
+    Bloom filter can prune), else None."""
+    from .engine import _is_numeric_bound, _norm_term
+    t = _norm_term(term)
+    if t[0] == "in" and not _is_numeric_bound(t[2][0]):
+        return t
+    return None
+
+
+def _bloom_keep(row: dict, term: tuple) -> bool:
+    """Per-chunk Bloom test for one term, the pure-python twin of
+    engine._bloom_keep_cond: a string =/IN term keeps the chunk iff
+    SOME value has all k bits set in the chunk's filter for its
+    column; other terms, and chunks without that filter, keep."""
+    from .engine import _bloom_bit_positions
+    t = _bloom_term(term)
+    cols = row.get("bloom_cols") or []
+    if t is None or t[1] not in cols:
+        return True
+    words = row["blooms"][cols.index(t[1])]
+    if not words:
+        return True
+    m = 64 * len(words)
+    return any(
+        all(words[p >> 6] >> (p & 63) & 1
+            for p in _bloom_bit_positions(
+                v if isinstance(v, bytes) else str(v).encode("utf-8"), m))
+        for v in t[2])
+
+
 class _PartMessage(WriterCommitMessage):
-    """Picklable per-task lineage: one written part (or an empty
-    task)."""
+    """Picklable per-task lineage: one written part's id and JSON
+    manifest entry (engine.write_part), or (None, None) for an empty
+    task."""
 
-    def __init__(self, part_id=None, file=None, n_chunks=0, n_rows=0,
-                 bytes_in=0, bytes_out=0, wall_ms=0.0, codecs="",
-                 zones="{}", file_hash=None):
+    def __init__(self, part_id=None, entry=None):
         self.part_id = part_id
-        self.file = file
-        self.n_chunks = n_chunks
-        self.n_rows = n_rows
-        self.bytes_in = bytes_in
-        self.bytes_out = bytes_out
-        self.wall_ms = wall_ms
-        self.codecs = codecs
-        self.zones = zones
-        self.file_hash = file_hash
+        self.entry = entry
+
+    @property
+    def file(self):
+        import json as _json
+        return _json.loads(self.entry)["file"] if self.entry else None
 
 
-def _encode_batches_to_part(iterator, pid: int, fname: str, path: str,
-                            key: list[str], rows_per_chunk: int,
-                            codec: str, block_codec: str,
-                            bloom_cols: list[str] | None) -> _PartMessage:
-    """Task-side encode kernel shared by the batch and streaming
-    writers: rebatch the partition's Arrow stream to rows_per_chunk
-    chunks through engine.encode_chunk (per-partition codec memo, zone
-    summaries, optional blooms) and write ONE part file atomically.
-    `pid` is embedded in the chunk rows (`part_id` — it must equal the
-    manifest key the commit assigns: the equality-delete reader scopes
-    by it)."""
+def _write_task_part(w, iterator, pid: int, fname: str) -> _PartMessage:
+    """Task-side write shared by the batch and streaming writers `w`:
+    the partition's Arrow stream becomes part `pid` through the
+    engine's one encode loop and one part writer.  An empty partition
+    writes no file."""
+    import json as _json
     import os as _os
-    import time as _time
 
-    from .engine import (_chunk_rows_to_batch, encode_chunk,
-                         part_zone_summary, take_full_batches,
-                         write_part_atomic)
-    t0 = _time.monotonic()
-    chunks: list[dict] = []
-    buf: list[pa.RecordBatch] = []
-    buffered = 0
-    plan: dict = {}
-
-    def drain(final: bool):
-        nonlocal buf, buffered
-        full, buf, buffered = take_full_batches(
-            buf, buffered, rows_per_chunk, final)
-        for head in full:
-            chunks.append(encode_chunk(
-                head, pid, len(chunks), codec,
-                plan if codec == "auto" else None,
-                zone_key=key[0], block_codec=block_codec,
-                bloom_cols=bloom_cols))
-
-    for batch in iterator:
-        if batch.num_rows == 0:
-            continue
-        buf.append(batch)
-        buffered += batch.num_rows
-        drain(final=False)
-    drain(final=True)
+    from .engine import encode_part, part_clock, write_part
+    since = part_clock()
+    chunks = list(encode_part(iterator, pid, w._codec, w._rows_per_chunk,
+                              zone_key=w._key[0],
+                              block_codec=w._block_codec,
+                              bloom_cols=w._bloom_cols))
     if not chunks:
-        return _PartMessage()  # empty partition: no part file
-    data_dir = _os.path.join(path, "data")
+        return _PartMessage()
+    data_dir = _os.path.join(w._path, "data")
     _os.makedirs(data_dir, exist_ok=True)
-    tbl = pa.Table.from_batches([_chunk_rows_to_batch(chunks)])
-    final = _os.path.join(data_dir, fname)
-    fhash = write_part_atomic(tbl, final)
-    return _PartMessage(
-        part_id=pid, file=final, n_chunks=len(chunks),
-        n_rows=int(sum(c["n_rows"] for c in chunks)),
-        bytes_in=int(sum(sum(c["bytes_in"]) for c in chunks)),
-        bytes_out=int(sum(sum(c["bytes_out"]) for c in chunks)),
-        wall_ms=(_time.monotonic() - t0) * 1000.0,
-        codecs=",".join(sorted({c for ch in chunks
-                                for c in ch["codecs"]})),
-        zones=part_zone_summary(chunks), file_hash=fhash)
+    entry = write_part(chunks, pid, _os.path.join(data_dir, fname), since)
+    return _PartMessage(pid, _json.dumps(entry))
+
+
+def _abort_parts(messages) -> None:
+    """Delete the files an aborted job's tasks wrote."""
+    import os as _os
+    for m in messages or []:
+        if m is not None and m.file:
+            try:
+                _os.remove(m.file)
+            except OSError:
+                pass
 
 
 def _parse_write_options(options, schema):
@@ -421,10 +430,11 @@ class _EncodedTableWriter(DataSourceArrowWriter):
     of the Catalyst surface.
 
     Execution shape: each Spark input partition encodes into exactly
-    ONE part file through the same chunk kernels as ``write_encoded``
-    (`engine.encode_chunk`: rows_per_chunk rebatch, per-column codec
-    auto-selection, zone summaries, optional blooms, atomic
-    write+hash); the driver's ``commit()`` then performs the manifest's
+    ONE part file through the same engine functions as
+    ``write_encoded`` (`engine.encode_part`: rows_per_chunk rebatch,
+    per-column codec auto-selection, zone maps, optional blooms;
+    `engine.write_part`: atomic write + hash, manifest entry); the
+    driver's ``commit()`` then performs the manifest's
     single CAS snapshot commit — all-or-nothing exactly like the Python
     API, and a failed/aborted job leaves only unreferenced temp-named
     files (``abort`` also deletes them eagerly).
@@ -448,7 +458,7 @@ class _EncodedTableWriter(DataSourceArrowWriter):
     def __init__(self, options, schema, overwrite: bool):
         import uuid as _uuid
 
-        from .manifest import EncodedTable
+        from .manifest import EncodedTable, _unify_nullability
         (self._path, self._key, self._rows_per_chunk, self._codec,
          self._block_codec, self._bloom_cols, arrow_schema) = \
             _parse_write_options(options, schema)
@@ -479,13 +489,8 @@ class _EncodedTableWriter(DataSourceArrowWriter):
                     f"append schema {cols} does not match table schema "
                     f"{[f.name for f in committed]}")
             if committed is not None:
-                # a stricter-nullability batch must not flip the
-                # table schema non-nullable (old chunks carry nulls)
-                unified = pa.schema([
-                    f.with_nullable(f.nullable
-                                    or committed.field(i).nullable)
-                    for i, f in enumerate(arrow_schema)])
-                self._schema_ipc = unified.serialize().to_pybytes()
+                self._schema_ipc = _unify_nullability(
+                    arrow_schema, committed).serialize().to_pybytes()
             self._part_base = 1 + max(
                 (int(p) for p in self._parent["parts"]), default=-1)
 
@@ -493,15 +498,12 @@ class _EncodedTableWriter(DataSourceArrowWriter):
     def write(self, iterator):
         from pyspark import TaskContext
         pid = self._part_base + TaskContext.get().partitionId()
-        return _encode_batches_to_part(
-            iterator, pid, f"part-{pid:05d}-{self._token}.parquet",
-            self._path, self._key, self._rows_per_chunk,
-            self._codec, self._block_codec, self._bloom_cols)
+        return _write_task_part(self, iterator, pid,
+                                f"part-{pid:05d}-{self._token}.parquet")
 
     # ---- driver ------------------------------------------------------
     def commit(self, messages):
-        import json as _json
-
+        from .engine import part_entries
         from .manifest import EncodedTable
         written = [m for m in messages
                    if m is not None and m.part_id is not None]
@@ -511,15 +513,7 @@ class _EncodedTableWriter(DataSourceArrowWriter):
                  else (parent.get("meta") or {}))
         parts = ({} if self._overwrite or parent is None
                  else dict(parent["parts"]))
-        for m in written:
-            parts[str(m.part_id)] = {
-                "file": m.file, "n_chunks": m.n_chunks,
-                "n_rows": m.n_rows, "bytes_in": m.bytes_in,
-                "bytes_out": m.bytes_out, "wall_ms": m.wall_ms,
-                "codecs": m.codecs,
-                "zones": _json.loads(m.zones) if m.zones else {},
-                "file_hash": m.file_hash,
-            }
+        parts.update(part_entries(written))
         meta = {"key": self._key, "n_parts": len(parts),
                 "codec": self._codec, "block_codec": self._block_codec,
                 "rows_per_chunk": self._rows_per_chunk,
@@ -549,13 +543,7 @@ class _EncodedTableWriter(DataSourceArrowWriter):
         table.commit(parts, self._schema_ipc, parent, meta)
 
     def abort(self, messages):
-        import os as _os
-        for m in messages or []:
-            if m is not None and getattr(m, "file", None):
-                try:
-                    _os.remove(m.file)
-                except OSError:
-                    pass
+        _abort_parts(messages)
 
 
 class _EncodedTableStreamWriter(DataSourceStreamArrowWriter):
@@ -566,7 +554,7 @@ class _EncodedTableStreamWriter(DataSourceStreamArrowWriter):
     (committed by the previous batch — batches of one query are
     sequential, so every task of a batch sees the same parent), claims
     part id ``max+1+partitionId``, and encodes its partition with the
-    shared :func:`_encode_batches_to_part` kernel; the driver's
+    shared :func:`_write_task_part`; the driver's
     ``commit(messages, batchId)`` is ONE manifest CAS chained on that
     same parent.  Exactly-once comes from two fences:
 
@@ -628,17 +616,14 @@ class _EncodedTableStreamWriter(DataSourceStreamArrowWriter):
         else:
             base = 0
         pid = base + TaskContext.get().partitionId()
-        return _encode_batches_to_part(
-            iterator, pid,
-            f"part-{pid:05d}-s{_uuid.uuid4().hex[:12]}.parquet",
-            self._path, self._key, self._rows_per_chunk,
-            self._codec, self._block_codec, self._bloom_cols)
+        return _write_task_part(
+            self, iterator, pid,
+            f"part-{pid:05d}-s{_uuid.uuid4().hex[:12]}.parquet")
 
     # ---- driver ------------------------------------------------------
     def commit(self, messages, batchId):
-        import json as _json
-
-        from .manifest import EncodedTable
+        from .engine import part_entries
+        from .manifest import EncodedTable, _unify_nullability
         written = [m for m in messages
                    if m is not None and m.part_id is not None]
         table = EncodedTable(self._path)
@@ -676,24 +661,18 @@ class _EncodedTableStreamWriter(DataSourceStreamArrowWriter):
             self.abort(messages, batchId)
             return
         parts = dict(parent["parts"]) if parent else {}
-        for m in written:
-            if str(m.part_id) in parts:
-                # an external writer committed between our tasks'
-                # planning read and now — refuse rather than clobber
-                self.abort(messages, batchId)
-                from .manifest import ConcurrentCommitError
-                raise ConcurrentCommitError(
-                    f"part id {m.part_id} already committed at "
-                    f"{self._path}: another writer raced this "
-                    "streaming query (one writer per external table)")
-            parts[str(m.part_id)] = {
-                "file": m.file, "n_chunks": m.n_chunks,
-                "n_rows": m.n_rows, "bytes_in": m.bytes_in,
-                "bytes_out": m.bytes_out, "wall_ms": m.wall_ms,
-                "codecs": m.codecs,
-                "zones": _json.loads(m.zones) if m.zones else {},
-                "file_hash": m.file_hash,
-            }
+        new_parts = part_entries(written)
+        clash = sorted(set(parts) & set(new_parts), key=int)
+        if clash:
+            # an external writer committed between our tasks'
+            # planning read and now — refuse rather than clobber
+            self.abort(messages, batchId)
+            from .manifest import ConcurrentCommitError
+            raise ConcurrentCommitError(
+                f"part id {clash[0]} already committed at "
+                f"{self._path}: another writer raced this "
+                "streaming query (one writer per external table)")
+        parts.update(new_parts)
         schema_ipc = self._schema_ipc
         committed = table.schema(parent) if parent else None
         if committed is not None:
@@ -703,10 +682,8 @@ class _EncodedTableStreamWriter(DataSourceStreamArrowWriter):
                     f"stream schema {self._cols} does not match table "
                     f"schema {[f.name for f in committed]}")
             mine = pa.ipc.read_schema(pa.BufferReader(schema_ipc))
-            unified = pa.schema([
-                f.with_nullable(f.nullable or committed.field(i).nullable)
-                for i, f in enumerate(mine)])
-            schema_ipc = unified.serialize().to_pybytes()
+            schema_ipc = _unify_nullability(
+                mine, committed).serialize().to_pybytes()
         meta = {"key": self._key, "n_parts": len(parts),
                 "codec": self._codec, "block_codec": self._block_codec,
                 "rows_per_chunk": self._rows_per_chunk,
@@ -725,13 +702,7 @@ class _EncodedTableStreamWriter(DataSourceStreamArrowWriter):
         table.commit(parts, schema_ipc, parent, meta)
 
     def abort(self, messages, batchId):
-        import os as _os
-        for m in messages or []:
-            if m is not None and getattr(m, "file", None):
-                try:
-                    _os.remove(m.file)
-                except OSError:
-                    pass
+        _abort_parts(messages)
 
 
 class _EncodedTableStreamReader(DataSourceStreamReader):

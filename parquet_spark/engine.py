@@ -22,7 +22,10 @@ state and no shuffle (narrow mapInArrow over encoded rows).
 
 from __future__ import annotations
 
-from typing import Iterator
+import json
+import os
+import time
+from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -44,12 +47,11 @@ def file_digest(path: str) -> str:
 
 def write_part_atomic(tbl: pa.Table, final: str) -> str:
     """Write a part file via tmp-name + atomic rename, returning the
-    blake2b-64 digest of its bytes.  Every data-file writer funnels
-    through here so the manifest can carry a per-part `file_hash`
+    blake2b-64 digest of its bytes.  write_part funnels every data-file
+    write through here so the manifest can carry a per-part `file_hash`
     that `fsck_table(deep=True)` re-verifies — the bit-rot /
     truncated-upload detector the commit protocol itself cannot be
     (CAS protects the pointer, not the object bytes)."""
-    import os
     import uuid
 
     import pyarrow.parquet as pq
@@ -375,8 +377,13 @@ def _chunk_rows_to_batch(chunks: list[dict]) -> pa.RecordBatch:
 
 # ------------------------------------------------------------- Spark side
 
-def part_zone_summary(chunks: list[dict]) -> str:
-    """Fold per-chunk zone stats into ONE per-part summary (JSON) for
+# summary slots 0-5, in order; even slots keep the min, odd the max
+_ZONE_BOUND_FIELDS = ("zone_min_str", "zone_max_str", "zone_min_num",
+                      "zone_max_num", "zone_min_dbl", "zone_max_dbl")
+
+
+def part_zone_summary(tbl: pa.Table) -> dict[str, list]:
+    """Fold a part's chunk-row zone stats into ONE per-part summary for
     the snapshot manifest — the Iceberg per-data-file column-bounds
     analog.  The driver prunes whole part FILES against it before any
     Spark job reads a footer (manifest._prune_parts); chunk-level zone
@@ -386,48 +393,29 @@ def part_zone_summary(chunks: list[dict]) -> str:
     max_dbl, nulls, covered_rows]} — bounds are min/max over the
     chunks that carry the column (None-safe), nulls summed,
     covered_rows = Σ n_rows of those chunks (covered < part rows ⇒
-    readers must treat the bounds as partial and keep the file)."""
-    import json as _json
+    readers must treat the bounds as partial and keep the file).
+    Legacy v1 chunk rows (null zone arrays) contribute nothing."""
+    cols = {f: tbl.column(f).to_pylist()
+            for f in _ZONE_BOUND_FIELDS + ("zone_cols", "zone_nulls",
+                                           "n_rows")}
 
-    def at(ch, arr, i):
-        vals = ch.get(arr)
-        return vals[i] if vals is not None and i < len(vals) else None
+    def at(field, i, j):
+        vals = cols[field][i]
+        return vals[j] if vals is not None and j < len(vals) else None
 
     summary: dict[str, list] = {}
-    for ch in chunks:
-        for i, col in enumerate(ch.get("zone_cols") or ()):
+    for i, zone_cols in enumerate(cols["zone_cols"]):
+        for j, col in enumerate(zone_cols or ()):
             s = summary.setdefault(col, [None, None, None, None,
                                          None, None, 0, 0])
-            for slot, arr in ((0, "zone_min_str"), (2, "zone_min_num"),
-                              (4, "zone_min_dbl")):
-                v = at(ch, arr, i)
-                if v is not None and (s[slot] is None or v < s[slot]):
+            for slot, field in enumerate(_ZONE_BOUND_FIELDS):
+                v = at(field, i, j)
+                if v is not None and (s[slot] is None or (
+                        v < s[slot] if slot % 2 == 0 else v > s[slot])):
                     s[slot] = v
-            for slot, arr in ((1, "zone_max_str"), (3, "zone_max_num"),
-                              (5, "zone_max_dbl")):
-                v = at(ch, arr, i)
-                if v is not None and (s[slot] is None or v > s[slot]):
-                    s[slot] = v
-            s[6] += int(at(ch, "zone_nulls", i) or 0)
-            s[7] += int(ch.get("n_rows") or 0)
-    return _json.dumps(summary)
-
-
-_ZONE_ROW_FIELDS = ("zone_cols", "zone_min_str", "zone_max_str",
-                    "zone_min_num", "zone_max_num", "zone_min_dbl",
-                    "zone_max_dbl", "zone_nulls", "n_rows")
-
-
-def part_zone_summary_from_chunkrows(tbl: pa.Table) -> str:
-    """part_zone_summary over a CHUNK-ROW table (the encoded relation)
-    — the lifecycle writers (compaction, rewrite, relocation) rebuild
-    parts from committed chunk rows rather than encode_chunk dicts.
-    Legacy v1 chunk rows (null zone arrays) contribute nothing."""
-    cols = {f: tbl.column(f).to_pylist() for f in _ZONE_ROW_FIELDS
-            if f in tbl.schema.names}
-    n = tbl.num_rows
-    chunks = [{f: cols[f][i] for f in cols} for i in range(n)]
-    return part_zone_summary(chunks)
+            s[6] += int(at("zone_nulls", i, j) or 0)
+            s[7] += int(cols["n_rows"][i] or 0)
+    return summary
 
 
 def partition_for_encode(df: DataFrame, key: list[str] | None = None,
@@ -535,46 +523,132 @@ def zorder_table(df: DataFrame, zorder_by: list[str],
                         _prepartitioned=True, **encode_kw)
 
 
-def take_full_batches(buf: list[pa.RecordBatch], buffered: int, n: int,
-                      final: bool) -> tuple[list[pa.RecordBatch],
-                                            list[pa.RecordBatch], int]:
-    """Slice exactly-n-row batches off an accumulated batch list.
-
-    Returns (full_batches, remaining_buf, remaining_count).  The single
-    source of truth for the rows_per_chunk invariant — used by the
-    streaming _rebatch here and by write_encoded's per-partition drain
-    (one implementation, one set of edge cases)."""
-    out: list[pa.RecordBatch] = []
-    while buffered >= n or (final and buffered):
-        tbl = pa.Table.from_batches(buf)
-        take = min(n, buffered)
-        head = tbl.slice(0, take).combine_chunks()
-        out.append(head.to_batches()[0])
-        rest = tbl.slice(take)
-        buffered = rest.num_rows
-        buf = rest.to_batches() if buffered else []
-    return out, buf, buffered
-
-
-def _rebatch(batches: Iterator[pa.RecordBatch],
+def _rebatch(batches: Iterable[pa.RecordBatch],
              n: int) -> Iterator[pa.RecordBatch]:
     """Re-slice an Arrow batch stream into exactly-n-row batches (the
-    row-group size knob).  Worker-side and session-conf-free: chunk
-    boundaries no longer depend on spark.sql.execution.arrow.
-    maxRecordsPerBatch, so encode_table never mutates session state and
-    chunk layout is identical under any Arrow batch configuration."""
+    row-group size knob) plus one short tail.  Worker-side and
+    session-conf-free: chunk boundaries do not depend on
+    spark.sql.execution.arrow.maxRecordsPerBatch, so encode_table never
+    mutates session state and chunk layout is identical under any
+    Arrow batch configuration.  A stream holding only zero-row batches
+    yields one of them, so an empty parquet row group still encodes to
+    one (empty) chunk; a stream without batches yields nothing (Spark
+    sends none for an empty partition)."""
     buf: list[pa.RecordBatch] = []
     have = 0
+    empty, rows = None, False
+
+    def cut(final: bool) -> Iterator[pa.RecordBatch]:
+        nonlocal buf, have
+        while have >= n or (final and have):
+            tbl = pa.Table.from_batches(buf)
+            take = min(n, have)
+            yield tbl.slice(0, take).combine_chunks().to_batches()[0]
+            have -= take
+            buf = tbl.slice(take).to_batches() if have else []
+
     for b in batches:
         if b.num_rows == 0:
+            empty = b
             continue
+        rows = True
         buf.append(b)
         have += b.num_rows
-        full, buf, have = take_full_batches(buf, have, n, final=False)
-        yield from full
-    if have:
-        full, _, _ = take_full_batches(buf, have, n, final=True)
-        yield from full
+        yield from cut(final=False)
+    yield from cut(final=True)
+    if empty is not None and not rows:
+        yield empty
+
+
+def encode_part(batches: Iterable[pa.RecordBatch], pid: int,
+                codec: str = "auto",
+                rows_per_chunk: int = DEFAULT_ROWS_PER_CHUNK,
+                zone_key: str | None = None, block_codec: str = "auto",
+                zone_cols: list[str] | None = None,
+                bloom_cols: list[str] | None = None,
+                plan: dict | None = None) -> Iterator[dict]:
+    """Encode one part's Arrow stream into chunk rows — the one loop
+    over encode_chunk, shared by every writer (encode_table,
+    write_encoded, the DataSource writers, the splits path and
+    compaction's rechunk).  Each rows_per_chunk slice (the reference's
+    RowGroupSize, default 10,000, Options.cs:8) is one chunk; the part
+    is the fragment (SURVEY §1.5).  Under codec="auto" the part keeps
+    one codec-plan memo, so selection and FSST training run on its
+    first chunk only; pass `plan` to share a memo across calls (rechunk
+    runs of one schema).  Chunk ids count from 0; write_part restamps
+    both ids anyway."""
+    if codec != "auto":
+        plan = None
+    elif plan is None:
+        plan = {}
+    for cid, batch in enumerate(_rebatch(batches, rows_per_chunk)):
+        yield encode_chunk(batch, pid, cid, codec, plan, zone_key=zone_key,
+                           block_codec=block_codec, zone_cols=zone_cols,
+                           bloom_cols=bloom_cols)
+
+
+# lineage row of one written part: mapInArrow writers emit it, the
+# driver folds the rows into the snapshot's `parts` (part_entries)
+PART_DDL = "part_id bigint, entry string"
+
+
+def part_clock() -> tuple[float, float]:
+    """(wall, CPU) stamp taken when a part's work starts; write_part
+    turns it into the entry's wall_ms / cpu_ms (task CPU is the stable
+    signal on a host with stall windows: it stays flat when wall time
+    inflates under contention)."""
+    return time.monotonic(), time.process_time()
+
+
+def write_part(chunk_rows: list[dict] | pa.Table, pid: int, final: str,
+               since: tuple[float, float], **lineage) -> dict:
+    """Write one part file and return its manifest entry — the one
+    writer every write path (fresh encodes, compaction, rewrite,
+    relocation, DataSource, splits) goes through.
+
+    Stamps `part_id = pid` and `chunk_id = 0..n-1` on the chunk rows
+    (encode_chunk dicts or a chunk-row table): a chunk row's part_id
+    must equal its manifest key, because delete scoping and the
+    aggregate pushdowns' boundary-chunk selection read it (FORMAT.md
+    §3, checked by fsck_table(deep=True)).  Writes atomically with a
+    file hash, and returns file, n_chunks, n_rows, bytes_in, bytes_out,
+    wall_ms, cpu_ms (since `since`, a part_clock() stamp), codecs, zones
+    and file_hash, plus the writer's extra `lineage` keys."""
+    tbl = (pa.Table.from_batches([_chunk_rows_to_batch(chunk_rows)])
+           if isinstance(chunk_rows, list) else chunk_rows)
+    n = tbl.num_rows
+    for name, ids in (("part_id", np.full(n, pid, dtype=np.int64)),
+                      ("chunk_id", np.arange(n, dtype=np.int64))):
+        tbl = tbl.set_column(tbl.schema.get_field_index(name), name,
+                             pa.array(ids))
+    file_hash = write_part_atomic(tbl, final)
+
+    def total(col: str) -> int:
+        return int(pc.sum(pc.list_flatten(tbl.column(col))).as_py() or 0)
+
+    return {
+        "file": final, "n_chunks": n,
+        "n_rows": int(pc.sum(tbl.column("n_rows")).as_py() or 0),
+        "bytes_in": total("bytes_in"), "bytes_out": total("bytes_out"),
+        "wall_ms": (time.monotonic() - since[0]) * 1000.0,
+        "cpu_ms": (time.process_time() - since[1]) * 1000.0,
+        "codecs": ",".join(sorted(set(
+            pc.list_flatten(tbl.column("codecs")).to_pylist()))),
+        "zones": part_zone_summary(tbl), "file_hash": file_hash,
+        **lineage}
+
+
+def part_row(pid: int, entry: dict) -> pa.RecordBatch:
+    """One PART_DDL lineage row carrying a write_part entry as is."""
+    return pa.RecordBatch.from_pylist(
+        [{"part_id": pid, "entry": json.dumps(entry)}])
+
+
+def part_entries(rows) -> dict[str, dict]:
+    """Snapshot `parts` dict from lineage rows or DataSource commit
+    messages (anything with `part_id` and a JSON `entry`)."""
+    return {str(r.part_id): json.loads(r.entry) for r in rows}
+
 
 
 def encode_table(df: DataFrame, key: list[str] | None = None,
@@ -605,17 +679,9 @@ def encode_table(df: DataFrame, key: list[str] | None = None,
         from pyspark import TaskContext
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        plan: dict[str, dict] = {}  # per-partition codec + symbol-table memo
-        cid = 0
-        for batch in _rebatch(batches, rows_per_chunk):
-            # one rebatched slice (= the row-group knob, reference
-            # default 10,000, Options.cs:8) is one chunk; the partition
-            # is the fragment (SURVEY §1.5)
-            chunk = encode_chunk(batch, pid, cid, codec,
-                                 plan if codec == "auto" else None,
+        for chunk in encode_part(batches, pid, codec, rows_per_chunk,
                                  zone_key=zone_key, block_codec=block_codec,
-                                 zone_cols=zone_cols, bloom_cols=bloom_cols)
-            cid += 1
+                                 zone_cols=zone_cols, bloom_cols=bloom_cols):
             yield _chunk_rows_to_batch([chunk])
 
     return dfp.mapInArrow(encoder, ENCODED_DDL)

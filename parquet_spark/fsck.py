@@ -9,7 +9,8 @@ a referenced file missing (storage loss, over-eager manual cleanup),
 a part whose parquet row count disagrees with its manifest entry, or
 an unreadable snapshot in the reachable chain.  Driver-side metadata
 walk; `deep=True` additionally opens each referenced file's parquet
-FOOTER (row counts only — still no payload decode).
+FOOTER (row counts), hashes its bytes and reads its `part_id` column —
+still no payload decode.
 
 Reference analog: the reference trusts the filesystem entirely
 (ParquetFile.cs opens and throws); at 10^12 rows an auditable
@@ -49,6 +50,14 @@ def fsck_table(table_path: str, deep: bool = False,
                          unhashed_parts)
       unhashed_parts     (deep) count of live parts without a stored
                          file_hash (informational)
+      part_id_mismatch   (deep) live parts whose chunk rows carry a
+                         `part_id` other than the part's manifest key
+                         (reads only that column).  Delete scoping and
+                         the aggregate pushdowns rely on the match;
+                         tables compacted or rewritten by builds that
+                         did not restamp ids break it.  Remedy: run
+                         `compact_table` again, which restamps every
+                         part it writes
       missing_deletes    delete-file dirs a LIVE snapshot lists but
                          storage lacks
       broken_refs        refs whose snapshot object is unreadable
@@ -60,7 +69,8 @@ def fsck_table(table_path: str, deep: bool = False,
                     "missing_files": [], "expired_history": [],
                     "size_mismatch": [],
                     "row_mismatch": [], "checksum_mismatch": [],
-                    "unhashed_parts": 0, "missing_deletes": [],
+                    "unhashed_parts": 0, "part_id_mismatch": [],
+                    "missing_deletes": [],
                     "broken_refs": [], "orphan_data": [],
                     "orphan_snapshots": []}
 
@@ -134,6 +144,13 @@ def fsck_table(table_path: str, deep: bool = False,
                             {"snapshot": snap["snapshot_id"],
                              "part": pid, "file": f,
                              "expected": want, "actual": got})
+                        continue  # rotten bytes: columns not trusted
+                found = pq.read_table(f, columns=["part_id"]).column(0)
+                stray = sorted(set(found.unique().to_pylist()) - {int(pid)})
+                if stray:
+                    report["part_id_mismatch"].append(
+                        {"snapshot": snap["snapshot_id"], "part": pid,
+                         "file": f, "chunk_part_ids": stray[:8]})
         for df in (snap.get("meta") or {}).get("delete_files") or []:
             p = df["path"] if isinstance(df, dict) else df
             live.add(os.path.abspath(p))
@@ -166,6 +183,7 @@ def fsck_table(table_path: str, deep: bool = False,
                         or report["size_mismatch"]
                         or report["row_mismatch"]
                         or report["checksum_mismatch"]
+                        or report["part_id_mismatch"]
                         or report["missing_deletes"]
                         or report["broken_refs"])
     return report

@@ -32,6 +32,7 @@ calling it again: resume skips the parts the other writer landed).
 from __future__ import annotations
 
 import base64
+import itertools
 import json
 import os
 import time
@@ -44,18 +45,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import (DEFAULT_ROWS_PER_CHUNK, ENCODED_DDL,
-                     write_part_atomic,
+from .engine import (DEFAULT_ROWS_PER_CHUNK, ENCODED_DDL, PART_DDL,
                      _as_num_bound, _chunk_rows_to_batch,
                      _is_numeric_bound, _norm_term, _prefix_upper,
                      _residual_cond,
-                     decode_chunk, decode_table, encode_chunk,
-                     part_zone_summary, part_zone_summary_from_chunkrows,
-                     prune_chunks_pred, take_full_batches)
-
-LINEAGE_DDL = ("part_id bigint, file string, n_chunks bigint, n_rows bigint, "
-               "bytes_in bigint, bytes_out bigint, wall_ms double, "
-               "codecs string, zones string, file_hash string")
+                     decode_chunk, decode_table, encode_part,
+                     part_clock, part_entries, part_row,
+                     prune_chunks_pred, write_part)
 
 # Snapshot manifest format version.  v1: round-1 snapshots (no version
 # field, no layout fingerprint).  v2 adds format_version, a layout
@@ -551,6 +547,16 @@ def _range_boundaries(df: DataFrame, col: str, n_parts: int) -> list:
             for i in range(1, n_parts)]
 
 
+def _unify_nullability(new: pa.Schema, prev: pa.Schema) -> pa.Schema:
+    """The schema an append commits: `new`'s fields, each nullable if
+    either side's is.  An append batch may carry stricter nullability
+    (e.g. a literal-filled column); committing its schema verbatim
+    would declare old null-bearing chunks non-nullable and crash
+    decode.  Field order and names must already match."""
+    return pa.schema([f.with_nullable(f.nullable or prev.field(i).nullable)
+                      for i, f in enumerate(new)])
+
+
 def write_encoded(df: DataFrame, table_path: str,
                   key: list[str] | None = None, n_parts: int | None = None,
                   codec: str = "auto",
@@ -836,7 +842,6 @@ def write_encoded(df: DataFrame, table_path: str,
 
     data_dir = os.path.join(table_path, "data")
     os.makedirs(data_dir, exist_ok=True)
-    schema_holder: list[bytes] = []
     # unique per write attempt: concurrent writers to one table must not
     # share file names, or the loser of the CAS race can have already
     # os.replace'd bytes under a name the WINNER's snapshot references
@@ -845,67 +850,33 @@ def write_encoded(df: DataFrame, table_path: str,
     token = uuid.uuid4().hex[:12]
 
     def writer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pending: dict[int, dict] = {}
+        def runs():
+            # (pid, rows) slices of the _part-sorted stream
+            for batch in batches:
+                parts = batch.column("_part").to_numpy()
+                data = batch.drop_columns(["_part"])
+                edges = np.flatnonzero(parts[1:] != parts[:-1]) + 1
+                bounds = np.concatenate(([0], edges, [len(parts)]))
+                for lo, hi in zip(bounds[:-1], bounds[1:]):
+                    yield int(parts[lo]), data.slice(lo, hi - lo)
 
-        def drain(st: dict, pid: int, final: bool):
-            """Materialize full rows_per_chunk chunks from the buffer
-            (chunk size is a writer-side knob, independent of the Arrow
-            batch configuration); `final` flushes the tail too."""
-            full, st["buf"], st["buffered"] = take_full_batches(
-                st["buf"], st["buffered"], rows_per_chunk, final)
-            for head in full:
-                st["chunks"].append(
-                    encode_chunk(head, pid, len(st["chunks"]), codec,
-                                 st["plan"] if codec == "auto" else None,
-                                 zone_key=key[0], block_codec=block_codec,
-                                 bloom_cols=bloom_cols))
+        # the input is sorted by _part, so each pid is one contiguous run
+        for pid, run in itertools.groupby(runs(), key=lambda r: r[0]):
+            since = part_clock()
+            chunks = list(encode_part(
+                (rows for _, rows in run), pid, codec, rows_per_chunk,
+                zone_key=key[0], block_codec=block_codec,
+                bloom_cols=bloom_cols))
+            final = os.path.join(data_dir, f"part-{pid:05d}-{token}.parquet")
+            yield part_row(pid, write_part(chunks, pid, final, since))
 
-        def flush(pid: int) -> pa.RecordBatch:
-            st = pending.pop(pid)
-            drain(st, pid, final=True)
-            tbl = pa.Table.from_batches(
-                [_chunk_rows_to_batch(st["chunks"])])
-            final = os.path.join(data_dir,
-                                 f"part-{pid:05d}-{token}.parquet")
-            fhash = write_part_atomic(tbl, final)
-            codec_mix = sorted({c for ch in st["chunks"] for c in ch["codecs"]})
-            return pa.RecordBatch.from_pylist([{
-                "part_id": pid, "file": final,
-                "n_chunks": len(st["chunks"]),
-                "n_rows": int(sum(c["n_rows"] for c in st["chunks"])),
-                "bytes_in": int(sum(sum(c["bytes_in"]) for c in st["chunks"])),
-                "bytes_out": int(sum(sum(c["bytes_out"]) for c in st["chunks"])),
-                "wall_ms": (time.monotonic() - st["t0"]) * 1000.0,
-                "codecs": ",".join(codec_mix),
-                "zones": part_zone_summary(st["chunks"]),
-                "file_hash": fhash,
-            }])
-
-        for batch in batches:
-            parts = batch.column("_part").to_numpy()
-            data = batch.drop_columns(["_part"])
-            edges = np.flatnonzero(parts[1:] != parts[:-1]) + 1
-            bounds = np.concatenate(([0], edges, [len(parts)]))
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                pid = int(parts[lo])
-                # input is sorted by _part: any pending pid < pid is complete
-                for done_pid in [p for p in pending if p < pid]:
-                    yield flush(done_pid)
-                st = pending.setdefault(
-                    pid, {"chunks": [], "buf": [], "buffered": 0,
-                          "plan": {}, "t0": time.monotonic()})
-                st["buf"].append(data.slice(lo, hi - lo))
-                st["buffered"] += hi - lo
-                drain(st, pid, final=False)
-        for pid in list(pending):
-            yield flush(pid)
-
-    lineage = dfp.mapInArrow(writer, LINEAGE_DDL).collect()
+    new_parts = part_entries(dfp.mapInArrow(writer, PART_DDL).collect())
 
     schema_ipc = None
-    if lineage:
-        # original data schema from a chunk row of the first written file
-        t = pq.read_table(lineage[0].file, columns=["schema_ipc"])
+    if new_parts:
+        # original data schema from a chunk row of a written file
+        t = pq.read_table(next(iter(new_parts.values()))["file"],
+                          columns=["schema_ipc"])
         if t.num_rows:
             schema_ipc = t.column(0)[0].as_py()
     if schema_ipc is not None and parent is not None and not replace:
@@ -923,29 +894,16 @@ def write_encoded(df: DataFrame, table_path: str,
                     f"has {[f.name for f in prev]} (alter_table "
                     "evolution applies to appends too — supply every "
                     "current column)")
-            # an APPEND batch may carry stricter nullability (e.g. a
-            # literal-filled column): committing its schema verbatim
-            # would declare old null-bearing chunks non-nullable and
-            # crash decode — unify per-field nullability instead
             if [f.name for f in new] == [f.name for f in prev]:
-                unified = pa.schema(
-                    [f.with_nullable(f.nullable or prev.field(i).nullable)
-                     for i, f in enumerate(new)])
-                schema_ipc = unified.serialize().to_pybytes()
+                schema_ipc = _unify_nullability(new, prev) \
+                    .serialize().to_pybytes()
 
     parts = {} if replace else dict(table.committed_parts(parent))
-    for row in lineage:
-        parts[str(row.part_id)] = {
-            "file": row.file, "n_chunks": row.n_chunks, "n_rows": row.n_rows,
-            "bytes_in": row.bytes_in, "bytes_out": row.bytes_out,
-            "wall_ms": row.wall_ms, "codecs": row.codecs,
-            "zones": json.loads(row.zones) if row.zones else {},
-            "file_hash": row.file_hash,
-        }
+    parts.update(new_parts)
     meta = {"key": key, "n_parts": n_parts, "codec": codec,
             "block_codec": block_codec,
             "rows_per_chunk": rows_per_chunk, "layout": layout,
-            "new_parts": sorted(int(r.part_id) for r in lineage)}
+            "new_parts": sorted(int(p) for p in new_parts)}
     if mappings is None:
         mappings = pmeta.get("mappings")
     if mappings:
@@ -1079,8 +1037,8 @@ def _rechunk_part(tbl: pa.Table, rows_per_chunk: int, pid: int,
     level half of the reference's row-group-rewriting merge
     (/root/reference/Parquet.Core/Fragment.cs:319-332): without it,
     many tiny chunks keep their per-chunk header + zone-map overhead
-    forever.  Row order is preserved (runs are consecutive); chunk ids
-    are renumbered into the output part's namespace.  Decode memory is
+    forever.  Row order is preserved (runs are consecutive); write_part
+    renumbers the ids into the output part's namespace.  Decode memory is
     bounded: a run is flushed once it buffers 4x rows_per_chunk, and
     pass-through chunks move as zero-copy Arrow slices of the input —
     only the under-sized chunks being merged are ever materialized as
@@ -1110,21 +1068,15 @@ def _rechunk_part(tbl: pa.Table, rows_per_chunk: int, pid: int,
             rows = tbl.take(run).to_pylist()
             batches = [decode_chunk(c["schema_ipc"], c["names"],
                                     c["payloads"]) for c in rows]
-            merged = pa.Table.from_batches(batches)
             # first NON-NULL key name in the run: a run led by an
             # all-null key slice (key_name None) must not lose the
             # sort-key zone map the later chunks carry
             zone_key = next((key_name_col[i] for i in run
                              if key_name_col[i] is not None), None)
-            plan = plans.setdefault(schema_ipc_col[run[0]], {})
-            enc_rows = []
-            for lo in range(0, merged.num_rows, rows_per_chunk):
-                sl = merged.slice(lo, rows_per_chunk).combine_chunks()
-                enc_rows.append(encode_chunk(
-                    sl.to_batches()[0], pid, 0, codec,
-                    plan if codec == "auto" else None,
-                    zone_key=zone_key, block_codec=block_codec,
-                    bloom_cols=bloom_cols))
+            enc_rows = list(encode_part(
+                batches, pid, codec, rows_per_chunk, zone_key=zone_key,
+                block_codec=block_codec, bloom_cols=bloom_cols,
+                plan=plans.setdefault(schema_ipc_col[run[0]], {})))
             pieces.append(pa.Table.from_batches(
                 [_chunk_rows_to_batch(enc_rows)]))
         run, buffered = [], 0
@@ -1150,15 +1102,7 @@ def _rechunk_part(tbl: pa.Table, rows_per_chunk: int, pid: int,
         pieces.append(tbl.slice(pt_start, n - pt_start))
     if not pieces:
         return tbl
-    out = pa.concat_tables(pieces, promote_options="default")
-    m = out.num_rows
-    out = out.set_column(out.schema.get_field_index("part_id"),
-                         pa.field("part_id", pa.int64()),
-                         pa.array([pid] * m, pa.int64()))
-    out = out.set_column(out.schema.get_field_index("chunk_id"),
-                         pa.field("chunk_id", pa.int64()),
-                         pa.array(range(m), pa.int64()))
-    return out.combine_chunks()
+    return pa.concat_tables(pieces, promote_options="default")
 
 
 def compact_table(spark: SparkSession, table_path: str,
@@ -1206,71 +1150,48 @@ def compact_table(spark: SparkSession, table_path: str,
     # back into full scans
     bloom_cols = (pmeta.get("layout") or {}).get("bloom_cols")
     enc = read_encoded(spark, table_path)
-    data_dir = os.path.join(table_path, "data")
-
-    writer = _compaction_writer(data_dir, "compact", new_sid, 0, rechunk,
-                                rows_per_chunk, codec, block_codec,
-                                bloom_cols)
-    lineage = (enc.repartition(target_parts, "part_id")
-               .sortWithinPartitions("part_id", "chunk_id")
-               .mapInArrow(writer, LINEAGE_DDL).collect())
-    parts = _lineage_parts(lineage)
+    parts = _write_chunk_parts(
+        enc.repartition(target_parts, "part_id")
+        .sortWithinPartitions("part_id", "chunk_id"),
+        os.path.join(table_path, "data"),
+        f"compact-{new_sid:06d}-{{pid:05d}}.parquet",
+        rechunk=dict(rows_per_chunk=rows_per_chunk, codec=codec,
+                     block_codec=block_codec, bloom_cols=bloom_cols)
+        if rechunk else None)
     meta = _compaction_meta(parent, rechunk, rows_per_chunk, codec,
                             block_codec, bloom_cols,
                             {"target_parts": target_parts})
     return table.commit(parts, None, parent, meta=meta)
 
 
-def _compaction_writer(data_dir: str, prefix: str, new_sid: int,
-                       offset: int, rechunk: bool, rows_per_chunk: int,
-                       codec: str, block_codec: str,
-                       bloom_cols: list[str] | None):
-    """The shared per-task part writer for both compaction forms
-    (compact_table rewrites everything, compact_small_parts only the
-    undersized parts): collect the task's chunk rows, optionally
-    rechunk under the committed encoding policy, write one atomic
-    hashed part file named <prefix>-<new_sid>-<pid>, emit its lineage
-    row.  `offset` shifts the new part ids past any carried ones."""
+def _write_chunk_parts(chunk_rows: DataFrame, data_dir: str, name: str,
+                       offset: int = 0,
+                       rechunk: dict | None = None) -> dict[str, dict]:
+    """The part writer every chunk-moving lifecycle op shares
+    (compact_table, compact_small_parts, rewrite_table,
+    relocate_table): each task of `chunk_rows` (committed or freshly
+    encoded chunk rows, already placed and ordered) becomes part
+    `offset + task partition id`, optionally rechunked
+    (`rechunk` = _rechunk_part's keyword arguments, i.e. the committed
+    encoding policy), written through write_part — which restamps
+    part_id/chunk_id to the new part — into `data_dir` under `name`
+    (a file-name template with a `{pid}` field).  Returns the written
+    parts' manifest entries."""
     def writer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
         ctx = TaskContext.get()
         pid = offset + (ctx.partitionId() if ctx is not None else 0)
-        t0 = time.monotonic()
-        rows: list[pa.RecordBatch] = []
-        for batch in batches:
-            rows.append(batch)
+        since = part_clock()
+        rows = [b for b in batches if b.num_rows]
         if not rows:
             return
         tbl = pa.Table.from_batches(rows)
-        if rechunk:
-            tbl = _rechunk_part(tbl, rows_per_chunk, pid,
-                                codec=codec, block_codec=block_codec,
-                                bloom_cols=bloom_cols)
-        final = os.path.join(data_dir,
-                             f"{prefix}-{new_sid:06d}-{pid:05d}.parquet")
-        fhash = write_part_atomic(tbl, final)
-        cmix = sorted({c for ch in tbl.column("codecs") for c in ch.as_py()})
-        yield pa.RecordBatch.from_pylist([{
-            "part_id": pid, "file": final,
-            "n_chunks": tbl.num_rows,
-            "n_rows": int(pa.compute.sum(tbl.column("n_rows")).as_py()),
-            "bytes_in": int(sum(sum(v.as_py()) for v in tbl.column("bytes_in"))),
-            "bytes_out": int(sum(sum(v.as_py()) for v in tbl.column("bytes_out"))),
-            "wall_ms": (time.monotonic() - t0) * 1000.0,
-            "codecs": ",".join(cmix),
-            "zones": part_zone_summary_from_chunkrows(tbl),
-            "file_hash": fhash,
-        }])
-    return writer
+        if rechunk is not None:
+            tbl = _rechunk_part(tbl, pid=pid, **rechunk)
+        final = os.path.join(data_dir, name.format(pid=pid))
+        yield part_row(pid, write_part(tbl, pid, final, since))
 
-
-def _lineage_parts(lineage) -> dict[str, dict]:
-    return {str(r.part_id): {
-        "file": r.file, "n_chunks": r.n_chunks, "n_rows": r.n_rows,
-        "bytes_in": r.bytes_in, "bytes_out": r.bytes_out,
-        "wall_ms": r.wall_ms, "codecs": r.codecs,
-        "zones": json.loads(r.zones) if r.zones else {},
-        "file_hash": r.file_hash} for r in lineage}
+    return part_entries(chunk_rows.mapInArrow(writer, PART_DDL).collect())
 
 
 def _compaction_meta(parent: dict, rechunk: bool, rows_per_chunk: int,
@@ -1362,25 +1283,25 @@ def compact_small_parts(spark: SparkSession, table_path: str,
     bloom_cols = (pmeta.get("layout") or {}).get("bloom_cols")
     total = sum(int(p.get("bytes_out") or 0) for p in small.values())
     n_bins = max(1, -(-total // max(target_bytes, 1)))
-    offset = max(int(pid) for pid in all_parts) + 1
-    data_dir = os.path.join(table_path, "data")
     enc = spark.read.schema(ENCODED_DDL).parquet(
         *[p["file"] for p in small.values()])
-    writer = _compaction_writer(data_dir, "binpack", new_sid, offset,
-                                rechunk, rows_per_chunk, codec,
-                                block_codec, bloom_cols)
-    lineage = (enc.repartition(n_bins, "part_id")
-               .sortWithinPartitions("part_id", "chunk_id")
-               .mapInArrow(writer, LINEAGE_DDL).collect())
-    parts = dict(carried)
-    parts.update(_lineage_parts(lineage))
+    packed = _write_chunk_parts(
+        enc.repartition(n_bins, "part_id")
+        .sortWithinPartitions("part_id", "chunk_id"),
+        os.path.join(table_path, "data"),
+        f"binpack-{new_sid:06d}-{{pid:05d}}.parquet",
+        offset=max(int(pid) for pid in all_parts) + 1,
+        rechunk=dict(rows_per_chunk=rows_per_chunk, codec=codec,
+                     block_codec=block_codec, bloom_cols=bloom_cols)
+        if rechunk else None)
+    parts = {**carried, **packed}
     meta = _compaction_meta(parent, rechunk, rows_per_chunk, codec,
                             block_codec, bloom_cols,
                             {"binpack": {"small_bytes": small_bytes,
                                          "target_bytes": target_bytes,
                                          "rewrote": len(small),
                                          "carried": len(carried),
-                                         "bins": len(lineage)}})
+                                         "bins": len(packed)}})
     return table.commit(parts, None, parent, meta=meta)
 
 
@@ -1602,46 +1523,10 @@ def rewrite_table(spark: SparkSession, table_path: str,
     new_sid = parent["snapshot_id"] + 1
     data_dir = os.path.join(table_path, "data")
     os.makedirs(data_dir, exist_ok=True)
-
-    def writer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        t0 = time.monotonic()
-        rows: list[pa.RecordBatch] = []
-        for batch in batches:
-            rows.append(batch)
-        if not rows:
-            return
-        tbl = pa.Table.from_batches(rows)
-        final = os.path.join(
-            data_dir, f"rewrite-{new_sid:06d}-{pid:05d}.parquet")
-        fhash = write_part_atomic(tbl, final)
-        cmix = sorted({c for ch in tbl.column("codecs")
-                       for c in ch.as_py()})
-        yield pa.RecordBatch.from_pylist([{
-            "part_id": pid, "file": final,
-            "n_chunks": tbl.num_rows,
-            "n_rows": int(pa.compute.sum(tbl.column("n_rows")).as_py()),
-            "bytes_in": int(sum(sum(v.as_py())
-                                for v in tbl.column("bytes_in"))),
-            "bytes_out": int(sum(sum(v.as_py())
-                                 for v in tbl.column("bytes_out"))),
-            "wall_ms": (time.monotonic() - t0) * 1000.0,
-            "codecs": ",".join(cmix),
-            "zones": part_zone_summary_from_chunkrows(tbl),
-            "file_hash": fhash,
-        }])
-
-    lineage = (enc.repartition(n_parts, "part_id")
-               .sortWithinPartitions("part_id", "chunk_id")
-               .mapInArrow(writer, LINEAGE_DDL).collect())
-    parts = {str(r.part_id): {
-        "file": r.file, "n_chunks": r.n_chunks, "n_rows": r.n_rows,
-        "bytes_in": r.bytes_in, "bytes_out": r.bytes_out,
-        "wall_ms": r.wall_ms, "codecs": r.codecs,
-        "zones": json.loads(r.zones) if r.zones else {},
-        "file_hash": r.file_hash} for r in lineage}
+    parts = _write_chunk_parts(
+        enc.repartition(n_parts, "part_id")
+        .sortWithinPartitions("part_id", "chunk_id"),
+        data_dir, f"rewrite-{new_sid:06d}-{{pid:05d}}.parquet")
     meta = dict(pmeta)
     meta.pop("delete_files", None)
     meta.pop("n_deleted", None)
@@ -2009,47 +1894,8 @@ def relocate_table(spark: SparkSession, src_path: str, dst_path: str,
                 F.col("key_min"), F.col("key_min_num").cast("string"))))
     data_dir = os.path.join(dst_path, "data")
     os.makedirs(data_dir, exist_ok=True)
-    token = uuid.uuid4().hex[:12]
-
-    def writer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        t0 = time.monotonic()
-        rows = [b for b in batches if b.num_rows]
-        if not rows:
-            return
-        tbl = pa.Table.from_batches(rows)
-        # renumber (part_id, chunk_id) into the new namespace
-        n = tbl.num_rows
-        tbl = tbl.set_column(
-            tbl.schema.get_field_index("part_id"), "part_id",
-            pa.array(np.full(n, pid, dtype=np.int64)))
-        tbl = tbl.set_column(
-            tbl.schema.get_field_index("chunk_id"), "chunk_id",
-            pa.array(np.arange(n, dtype=np.int64)))
-        final = os.path.join(data_dir,
-                             f"part-{pid:05d}-{token}.parquet")
-        fhash = write_part_atomic(tbl, final)
-        cmix = sorted({c for ch in tbl.column("codecs") for c in ch.as_py()})
-        yield pa.RecordBatch.from_pylist([{
-            "part_id": pid, "file": final, "n_chunks": n,
-            "n_rows": int(pa.compute.sum(tbl.column("n_rows")).as_py()),
-            "bytes_in": int(sum(sum(v.as_py()) for v in tbl.column("bytes_in"))),
-            "bytes_out": int(sum(sum(v.as_py()) for v in tbl.column("bytes_out"))),
-            "wall_ms": (time.monotonic() - t0) * 1000.0,
-            "codecs": ",".join(cmix),
-            "zones": part_zone_summary_from_chunkrows(tbl),
-            "file_hash": fhash,
-        }])
-
-    lineage = dfp.mapInArrow(writer, LINEAGE_DDL).collect()
-    parts = {str(r.part_id): {
-        "file": r.file, "n_chunks": r.n_chunks, "n_rows": r.n_rows,
-        "bytes_in": r.bytes_in, "bytes_out": r.bytes_out,
-        "wall_ms": r.wall_ms, "codecs": r.codecs,
-        "zones": json.loads(r.zones) if r.zones else {},
-        "file_hash": r.file_hash} for r in lineage}
+    parts = _write_chunk_parts(
+        dfp, data_dir, f"part-{{pid:05d}}-{uuid.uuid4().hex[:12]}.parquet")
     dst = EncodedTable(dst_path, backend=dst_backend)
     meta = {"relocated_from": src_path,
             "src_snapshot_id": parent_src["snapshot_id"],

@@ -25,7 +25,6 @@ row group = chunk.
 from __future__ import annotations
 
 import os
-import time
 import uuid
 from typing import Iterator
 
@@ -33,21 +32,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import (DEFAULT_ROWS_PER_CHUNK, ENCODED_DDL,
-                     write_part_atomic,
-                     _chunk_rows_to_batch, encode_chunk)
+from .engine import (DEFAULT_ROWS_PER_CHUNK, ENCODED_DDL, PART_DDL,
+                     _chunk_rows_to_batch, encode_part, part_clock,
+                     part_entries, part_row, write_part)
 from .manifest import EncodedTable, _check_resume_layout
 
 SPLIT_DDL = "split_id bigint, file string, row_group int, n_rows bigint"
-
-# splits lineage carries the source (file, row_group) so resume identity
-# is CONTENT-based, not ordinal: directory growth/reordering between
-# runs can never make a part id silently point at different data
-SPLITS_LINEAGE_DDL = ("part_id bigint, file string, n_chunks bigint, "
-                      "n_rows bigint, bytes_in bigint, bytes_out bigint, "
-                      "wall_ms double, cpu_ms double, codecs string, "
-                      "src_file string, src_row_group bigint, "
-                      "file_hash string")
 
 
 def list_splits(input_path: str) -> list[dict]:
@@ -93,30 +83,21 @@ def _normalize_schema(schema: pa.Schema) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _iter_chunks(batch_rows: list[dict], codec: str,
-                 rows_per_chunk: int,
-                 zone_key: str | None = None,
-                 block_codec: str = "auto") -> Iterator[dict]:
-    """Read each split and encode it chunk-by-chunk (runs in the worker)."""
-    for d in batch_rows:
-        pf = pq.ParquetFile(d["file"])
-        tbl = pf.read_row_group(d["row_group"])
-        norm = _normalize_schema(tbl.schema)
-        if norm != tbl.schema:
-            tbl = tbl.cast(norm)
-        if zone_key is None:
-            zone_key = next((f.name for f in tbl.schema
-                             if pa.types.is_string(f.type)), None)
-        plan: dict[str, dict] = {}
-        cid = 0
-        for lo in range(0, max(tbl.num_rows, 1), rows_per_chunk):
-            rb_tbl = tbl.slice(lo, rows_per_chunk).combine_chunks()
-            rb = rb_tbl.to_batches()[0] if rb_tbl.num_rows else \
-                pa.RecordBatch.from_pylist([], schema=tbl.schema)
-            yield encode_chunk(rb, d["split_id"], cid, codec,
-                               plan if codec == "auto" else None,
-                               zone_key=zone_key, block_codec=block_codec)
-            cid += 1
+def _encode_split(d: dict, codec: str, rows_per_chunk: int,
+                  block_codec: str = "auto") -> Iterator[dict]:
+    """Read one split and encode it chunk-by-chunk (runs in the
+    worker); the zone key is the first string column.  An empty row
+    group still yields one (empty) chunk."""
+    tbl = pq.ParquetFile(d["file"]).read_row_group(d["row_group"])
+    norm = _normalize_schema(tbl.schema)
+    if norm != tbl.schema:
+        tbl = tbl.cast(norm)
+    zone_key = next((f.name for f in tbl.schema
+                     if pa.types.is_string(f.type)), None)
+    batches = tbl.to_batches() or [
+        pa.RecordBatch.from_pylist([], schema=tbl.schema)]
+    return encode_part(batches, d["split_id"], codec, rows_per_chunk,
+                       zone_key=zone_key, block_codec=block_codec)
 
 
 def encode_splits(spark: SparkSession, input_path: str,
@@ -130,9 +111,10 @@ def encode_splits(spark: SparkSession, input_path: str,
 
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            for chunk in _iter_chunks(batch.to_pylist(), codec, rows_per_chunk,
-                                      block_codec=block_codec):
-                yield _chunk_rows_to_batch([chunk])
+            for d in batch.to_pylist():
+                for chunk in _encode_split(d, codec, rows_per_chunk,
+                                           block_codec=block_codec):
+                    yield _chunk_rows_to_batch([chunk])
 
     return _split_df(spark, splits, n_tasks).mapInArrow(enc, ENCODED_DDL)
 
@@ -203,32 +185,19 @@ def write_encoded_splits(spark: SparkSession, input_path: str,
     def writer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for d in batch.to_pylist():
-                t0 = time.monotonic()
-                c0 = time.process_time()
-                chunks = list(_iter_chunks([d], codec, rows_per_chunk,
-                                           block_codec=block_codec))
-                tbl = pa.Table.from_batches(
-                    [_chunk_rows_to_batch(chunks)])
-                final = os.path.join(
-                    data_dir, f"part-{d['split_id']:05d}-{token}.parquet")
-                fhash = write_part_atomic(tbl, final)
-                codec_mix = sorted({c for ch in chunks for c in ch["codecs"]})
-                yield pa.RecordBatch.from_pylist([{
-                    "part_id": d["split_id"], "file": final,
-                    "n_chunks": len(chunks),
-                    "n_rows": int(sum(c["n_rows"] for c in chunks)),
-                    "bytes_in": int(sum(sum(c["bytes_in"]) for c in chunks)),
-                    "bytes_out": int(sum(sum(c["bytes_out"]) for c in chunks)),
-                    "wall_ms": (time.monotonic() - t0) * 1000.0,
-                    # task CPU seconds: the scaling-evidence probe — if
-                    # the summed per-task CPU stays flat as parallelism
-                    # rises while wall time inflates, the slowdown is
-                    # host memory contention, not the engine
-                    "cpu_ms": (time.process_time() - c0) * 1000.0,
-                    "codecs": ",".join(codec_mix),
-                    "src_file": d["file"], "src_row_group": d["row_group"],
-                    "file_hash": fhash,
-                }])
+                since = part_clock()
+                chunks = list(_encode_split(d, codec, rows_per_chunk,
+                                            block_codec=block_codec))
+                pid = d["split_id"]
+                final = os.path.join(data_dir,
+                                     f"part-{pid:05d}-{token}.parquet")
+                # the source (file, row_group) rides in the entry:
+                # resume identity is CONTENT-based, not ordinal, so
+                # directory growth/reordering between runs can never
+                # make a part id silently point at different data
+                yield part_row(pid, write_part(
+                    chunks, pid, final, since, src_file=d["file"],
+                    src_row_group=d["row_group"]))
 
     schema_ipc = None
     if splits:
@@ -241,23 +210,13 @@ def write_encoded_splits(spark: SparkSession, input_path: str,
         return table.commit(dict(committed), schema_ipc, parent,
                             meta={**base_meta, "new_parts": []})
 
-    def lineage_parts(lineage) -> dict[str, dict]:
-        return {str(r.part_id): {
-            "file": r.file, "n_chunks": r.n_chunks, "n_rows": r.n_rows,
-            "bytes_in": r.bytes_in, "bytes_out": r.bytes_out,
-            "wall_ms": r.wall_ms, "cpu_ms": r.cpu_ms, "codecs": r.codecs,
-            "src_file": r.src_file, "src_row_group": r.src_row_group,
-            "file_hash": r.file_hash,
-        } for r in lineage}
-
     batch_size = checkpoint_every or len(splits)
     all_parts = dict(committed)
     snap = None
     for lo in range(0, len(splits), batch_size):
         batch = splits[lo:lo + batch_size]
-        lineage = _split_df(spark, batch, n_tasks) \
-            .mapInArrow(writer, SPLITS_LINEAGE_DDL).collect()
-        parts = lineage_parts(lineage)
+        parts = part_entries(_split_df(spark, batch, n_tasks)
+                             .mapInArrow(writer, PART_DDL).collect())
         all_parts = {**all_parts, **parts}
         meta = {**base_meta, "new_parts": sorted(int(k) for k in parts)}
         if checkpoint_every:

@@ -118,3 +118,38 @@ def test_fsck_deep_detects_bit_rot(spark, tmp_path):
     assert "BROKEN" in fsck_summary(rep)
     # shallow fsck cannot see byte-level rot (size unchanged)
     assert fsck_table(tbl, deep=False)["ok"]
+
+
+@pytest.mark.spark
+def test_fsck_deep_flags_stale_part_ids_until_recompacted(spark):
+    """A chunk row's part_id must equal its manifest key (delete
+    scoping and aggregate pushdown read it).  Deep fsck reports a part
+    whose chunk rows say otherwise — what a compaction by a build that
+    did not restamp ids left behind — and compact_table repairs it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_spark.engine import write_part_atomic
+    from parquet_spark.manifest import compact_table
+    d = _docs(spark)
+    tbl = tempfile.mkdtemp(prefix="fsck_pid_")
+    write_encoded(d, tbl, key=["doc_id"], n_parts=2, rows_per_chunk=64)
+    t = EncodedTable(tbl)
+    snap = t.current_snapshot()
+    victim = snap["parts"]["1"]["file"]
+    chunks = pq.read_table(victim)
+    chunks = chunks.set_column(
+        chunks.schema.get_field_index("part_id"), "part_id",
+        pa.array([7] * len(chunks), pa.int64()))
+    # keep the manifest's file hash truthful, so only the ids differ
+    snap["parts"]["1"]["file_hash"] = write_part_atomic(chunks, victim)
+    t.commit(snap["parts"], None, snap, meta=snap["meta"])
+    rep = fsck_table(tbl, deep=True)
+    assert not rep["ok"]
+    assert not rep["checksum_mismatch"]
+    assert [(e["part"], e["chunk_part_ids"])
+            for e in rep["part_id_mismatch"]] == [("1", [7])]
+    assert fsck_summary(rep).startswith("BROKEN")
+    compact_table(spark, tbl, target_parts=2)
+    rep2 = fsck_table(tbl, deep=True)
+    assert rep2["ok"] and not rep2["part_id_mismatch"], rep2

@@ -253,3 +253,33 @@ def test_sigkill_mid_run_resumes_from_last_checkpoint(spark, tmp_path):
     df = spark.read.parquet(src)
     verify_roundtrip(df, read_decoded(spark, tbl),
                      key=["url"], digest_col="text")
+
+
+@pytest.mark.spark
+def test_write_encoded_splits_parts_prune_by_zone(spark):
+    """Splits parts record per-part zones, so a narrow range on the
+    near-sorted warc_ts skips whole files, with the rows of a full
+    decode."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from parquet_spark.corpus import gen_batch
+    from parquet_spark.manifest import _prune_parts, read_decoded, scan_table
+    from parquet_spark.splits import write_encoded_splits
+    src = os.path.join(tempfile.mkdtemp(prefix="splits_zone_"),
+                       "in.parquet")
+    batch = gen_batch(np.arange(2000), seed=9)
+    pq.write_table(pa.Table.from_batches([batch]), src, row_group_size=250)
+    tbl = tempfile.mkdtemp(prefix="splits_zone_tbl_")
+    snap = write_encoded_splits(spark, src, tbl)
+    ts = batch.column("warc_ts")
+    pred = [("warc_ts", ts[900].value, ts[1000].value)]
+    kept = _prune_parts(snap["parts"], pred)
+    assert 0 < len(kept) < len(snap["parts"]) == 8
+    got = sorted(r.url for r in scan_table(spark, tbl, pred).collect())
+    want = sorted(r.url for r in read_decoded(spark, tbl).where(
+        F.unix_micros("warc_ts").between(ts[900].value, ts[1000].value))
+        .collect())
+    assert got == want and len(want) >= 100
